@@ -23,7 +23,16 @@ object Bench {
     def timeAll(): Map[String, (Double, Boolean)] = selected.map { case (name, fn) =>
       name -> BenchKit.timeNoop(spark, fn(spark, sfDir))
     }
-    val allPasses = (1 to passes).map(_ => timeAll())
+    // Janino compiles per pass, read outside the per-query timings: a
+    // warm pass should compile (almost) nothing — identical generated
+    // code is reused from BenchKit's codegen cache
+    val counted = (1 to passes).map { _ =>
+      val c0 = BenchKit.compiles()
+      val r = timeAll()
+      (r, BenchKit.compiles() - c0)
+    }
+    val allPasses = counted.map(_._1)
+    val compiles = counted.map(_._2)
     // min over SUCCESSFUL passes only — a pass that failed fast must
     // not win the min and silently deflate the timing; all-fail → -1
     val results: Map[String, Double] = allPasses.head.keys.map { k =>
@@ -41,7 +50,7 @@ object Bench {
     val total = results.values.filter(_ >= 0).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val json =
-      s"""{"metric":"total","value":${BenchKit.ms(total)},"unit":"sec","passes":$passes,"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${BenchKit.ms(total)},"unit":"sec","passes":$passes,"failed":$failedJson,"compiles":${compiles.mkString("[", ",", "]")},"queries":$qs,"sf":"$sfDir"}"""
     // belt & braces for the driver's parser: the JSON goes to a file as
     // well as stdout (r1's line was truncated by the log-tail capture;
     // r4's 2000-char tail truncated the total again — the repo-local

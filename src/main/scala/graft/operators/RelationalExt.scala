@@ -1730,10 +1730,15 @@ object RelationalExt {
     val qs = Seq(0.04 -> "p04", 0.06 -> "p06", 0.94 -> "p94", 0.96 -> "p96")
     def pos(q: Double): org.apache.spark.sql.Column =
       (col("n") - lit(1L)).cast("double") * lit(q)
+    // an n = 1 group has no higher neighbor: it falls back to the lower
+    // one (frac is 0 there), so the envelope is the group's one value,
+    // not NULL
     val envAggs = qs.flatMap { case (q, nm) =>
       val rank = floor(pos(q)).cast("long") + lit(1L)
-      Seq(min(when(col("cum") >= rank, col("v"))).cast("double").as(s"${nm}_lo"),
-        min(when(col("cum") >= rank + lit(1L), col("v"))).cast("double").as(s"${nm}_hi"),
+      val lo = min(when(col("cum") >= rank, col("v"))).cast("double")
+      Seq(lo.as(s"${nm}_lo"),
+        coalesce(min(when(col("cum") >= rank + lit(1L), col("v"))).cast("double"), lo)
+          .as(s"${nm}_hi"),
         max(pos(q) - floor(pos(q))).as(s"${nm}_f"))
     }
     // the envelope aggregates RIDE the exact-bounds groupBy — one

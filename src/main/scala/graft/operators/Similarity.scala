@@ -1284,7 +1284,7 @@ object Similarity {
       .orderBy(col("adc").asc, col("vec_id").asc)
       .limit(K)
       .select(col("vec_id"), col("label"),
-        round(col("adc").cast("double"), 6).as("adc_score"))
+        TextAnalysis.decimalR6(col("adc")).as("adc_score"))
   }
 
   private lazy val sPqAdcSql = {
@@ -1325,7 +1325,7 @@ object Similarity {
        |  FROM codes c JOIN dt ON c.m = dt.dm AND c.code = dt.dcell
        |  WHERE c.vec_id <> $QueryVec
        |  GROUP BY c.vec_id)
-       |SELECT a.vec_id, e.label, round(a.adc::DOUBLE, 6) AS adc_score
+       |SELECT a.vec_id, e.label, round(a.adc, 6)::DOUBLE AS adc_score
        |FROM adc a JOIN embeddings e ON a.vec_id = e.vec_id
        |ORDER BY a.adc, a.vec_id LIMIT $K""".stripMargin
   }

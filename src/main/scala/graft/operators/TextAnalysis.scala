@@ -591,7 +591,7 @@ object TextAnalysis {
         sum(round(col("c") * (col("pt") - col("pr")), 9)
           .cast("decimal(28,9)")).as("aff"))
       .select(col("doc_id"), col("in_target"), col("n_tokens"),
-        round(col("aff").cast("double"), 6).as("affinity"))
+        decimalR6(col("aff")).as("affinity"))
 
   /** DSIR's actual estimator — the per-doc log-likelihood ratio
     * Σ_f c_f · ln(p_t(f)/p_r(f)). Lives outside the oracle gate (libm
@@ -635,7 +635,7 @@ object TextAnalysis {
        |             WHERE in_target GROUP BY f) t ON r.f = t.f
        |  CROSS JOIN tot)
        |SELECT doc_id, in_target, CAST(sum(c) AS BIGINT) AS n_tokens,
-       |       round(sum(round(c * diff, 9)::DECIMAL(28,9))::DOUBLE, 6) AS affinity
+       |       round(sum(round(c * diff, 9)::DECIMAL(28,9)), 6)::DOUBLE AS affinity
        |FROM cdf JOIN model USING (f)
        |GROUP BY doc_id, in_target""".stripMargin
   }
@@ -816,15 +816,28 @@ object TextAnalysis {
 
   /** Engine-portable 6-dp rounding: fixed-point via floor on the SAME
     * double ops in both engines. `round(x, 6)` is NOT portable —
-    * Spark rounds the exact binary value HALF_UP via BigDecimal while
-    * DuckDB scales-and-rints the double, and near-half-point inputs
-    * round differently. floor(x·10⁶ + 0.5)/10⁶ runs the identical op
-    * sequence on the identical double in both engines, so whatever it
-    * picks at a boundary, it picks in both. Positive inputs only. */
+    * Spark rounds the double's decimal string HALF_UP
+    * (`BigDecimal.valueOf`) while DuckDB rounds the scaled double
+    * x·10⁶, and near-half-point inputs round differently.
+    * floor(x·10⁶ + 0.5)/10⁶ runs the identical op sequence on the
+    * identical double in both engines, so whatever it picks at a
+    * boundary, it picks in both. Positive inputs only. */
   private[operators] def r6(x: String): String =
     s"floor(($x) * 1e6 + 0.5) / 1e6"  // 1e6 not 1000000.0: Spark parses the
                                       // latter as DECIMAL and the division
                                       // would yield DECIMAL(·,9) output
+
+  /** An exact DECIMAL sum as a 6-dp double: rounded in the decimal
+    * domain first, then cast. Casting first and rounding the double
+    * is not portable — a sum ending in …500 becomes a double just
+    * above or below the half point. Spark rounds the double's decimal
+    * string (`BigDecimal.valueOf`) half up; DuckDB rounds the scaled
+    * double x·10⁶, so -0.2608405 (-0.26084049999… as a double) gave
+    * -0.260841 in Spark and -0.26084 in DuckDB (`s_pq_adc`, seed 314).
+    * Both engines round DECIMAL half away from zero, and the 6-dp
+    * decimal casts to the same nearest double in both. Oracle twin:
+    * `round(<sum>, 6)::DOUBLE`. */
+  private[graft] def decimalR6(sum: Column): Column = round(sum, 6).cast("double")
 
   /** Per-(doc, query-term) BM25 partial scores over a (doc_id, text)
     * frame — the shared core of the oracle query and the façade

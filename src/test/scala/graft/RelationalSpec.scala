@@ -222,4 +222,21 @@ class RelationalSpec extends SparkSpec {
     assert(out.agg(sum("n_docs")).collect()(0).getLong(0) == kept)
   }
 
+  test("a14 winsorize approx: a one-row group's envelope is its value, not NULL") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-winsor-one").toString
+    val li = Tables.lineitem(spark, sf)
+    // every existing flag keeps its rows; flag 'Z' gets exactly one
+    li.unionByName(li.limit(1).withColumn("l_returnflag", lit("Z")))
+      .write.parquet(s"$tmp/lineitem.parquet")
+    val one = operators.RelationalExt.queries("a14_winsorize_approx")(spark, tmp)
+      .filter(col("flag") === "Z").collect()
+    assert(one.length == 1)
+    val r = one.head
+    assert(r.getAs[Long]("n") == 1)
+    // the sketch's bounds equal the one value and sit inside the
+    // exact envelope; a NULL envelope made both checks NULL
+    assert(r.getAs[Any]("lo_within_bounds") == true &&
+      r.getAs[Any]("hi_within_bounds") == true, s"envelope: $r")
+  }
+
 }

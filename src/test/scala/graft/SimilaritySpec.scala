@@ -125,6 +125,27 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.queries("s_pq_adc")(spark, sf).collect().toSeq == again.toSeq)
   }
 
+  test("an exact decimal sum ending in ...500 rounds half away from zero in both engines") {
+    import spark.implicits._
+    // both sums fall just short of the half point as doubles
+    // (0.1234564999…, -0.2608404999…); DuckDB's round(DOUBLE, 6) takes
+    // the second (seed 314's s_pq_adc score) to -0.26084, rounding the
+    // decimal gives -0.260841 in both engines
+    val parts = Seq(("a", "0.123456250"), ("a", "0.000000250"),
+      ("b", "-0.260840250"), ("b", "-0.000000250"))
+    val out = parts.toDF("g", "x")
+      .groupBy(col("g")).agg(sum(col("x").cast("decimal(28,9)")).as("s"))
+      .select(col("g"), operators.TextAnalysis.decimalR6(col("s")).as("r"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(out == Map("a" -> 0.123457, "b" -> -0.260841))
+    // the oracles round the decimal sum too, never its double
+    for (q <- Seq("s_pq_adc", "t_domain_affinity")) {
+      val sql = SparkEntry.oracleSql(q)
+      assert(sql.contains(", 6)::DOUBLE AS"), s"$q oracle: no decimal rounding")
+      assert(!sql.contains("::DOUBLE, 6)"), s"$q oracle rounds a double")
+    }
+  }
+
   test("s_ivfpq_rerank: stays inside probed cells, exact cosines, shortlist holds recall vs full-cell exact") {
     val rr = Similarity.queries("s_ivfpq_rerank")(spark, sf).collect()
     assert(rr.nonEmpty && rr.length <= 10)
