@@ -1062,10 +1062,13 @@ object Graft {
 
     /** Connected components by alternating large-star/small-star
       * contraction: O(log n) rounds regardless of diameter — the
-      * 100 TB-safe variant for graphs whose diameter is unknown.
+      * 100 TB-safe variant for graphs whose diameter is unknown. The
+      * loop stops on the first round whose edge set is a star forest
+      * (an exact test, one round before the edge set stops changing).
       * Same (node, label = component min) output as
       * [[connectedComponents]], and the same contract: `und` must
-      * hold BOTH edge directions (nodes are taken from `src`). */
+      * hold BOTH edge directions (nodes are taken from `src`).
+      * `reliable` as in [[bfs]]. */
     def connectedComponentsStar(und: DataFrame, reliable: Boolean = false): DataFrame =
       Graph.starContractComponents(und, reliable)
 

@@ -2266,8 +2266,10 @@ object Similarity {
     * rows live on the DRIVER between rounds (k·M tiny rows per round —
     * a bounded collect), so rounds chain literal → scan → agg →
     * collect with no persist/unpersist bookkeeping and no broadcast
-    * exchange. Returns `(m, cell, ce, cn, n_vectors)` as a local
-    * literal frame. */
+    * exchange. `groups` must hold every `m` in `v0`: a round whose
+    * rows carry another `m` fails with an IllegalArgumentException.
+    * `vec_id` may be of any orderable type. Returns
+    * `(m, cell, ce, cn, n_vectors)` as a local literal frame. */
   private[operators] def kmeansFitGrouped(v0: DataFrame, k: Int, rounds: Int,
       groups: Seq[Int]): DataFrame = {
     val (rows, schema) = kmeansFitGroupedRows(v0, k, rounds, groups)
@@ -2278,7 +2280,7 @@ object Similarity {
   /** The grouped trainer's core: final model as driver-local rows
     * `(m, cell, ce, cn, n_vectors)` + their schema (no extra job to
     * re-collect when the caller wants [[Centroid]]s, not a frame). */
-  private[operators] def kmeansFitGroupedRows(v0: DataFrame, k: Int,
+  private[graft] def kmeansFitGroupedRows(v0: DataFrame, k: Int,
       rounds: Int, groups: Seq[Int]): (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) = {
     val spark = v0.sparkSession
     org.apache.spark.sql.graft.GraftFunctions.register(spark)
@@ -2301,10 +2303,13 @@ object Similarity {
     val schema = seedTop
       .select(col("m"), lit(0).cast("int").as("cell"), col("ce"),
         col("cn"), lit(0L).as("n_vectors")).schema
-    // cells numbered 0..k-1 in vec_id order, driver-side (≤ M·k rows)
+    // cells numbered 0..k-1 in vec_id order, driver-side (≤ M·k rows).
+    // Each group's branch is one TakeOrdered partition already in
+    // Spark's vec_id order, and collect keeps partition order, so the
+    // arrival order numbers the cells for any orderable id type.
     def seedModel(): Array[org.apache.spark.sql.Row] = seedTop.collect()
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1).flatMap { case (mv, rs) =>
-        rs.sortBy(_.getLong(1)).zipWithIndex.map { case (sr, i) =>
+        rs.zipWithIndex.map { case (sr, i) =>
           org.apache.spark.sql.Row(mv, i, sr.getSeq[Float](2), sr.getDouble(3), 0L)
         }
       }.toArray
@@ -2338,6 +2343,11 @@ object Similarity {
         .withColumn("cn", expr(foldDot("ce", "ce")))
         .select(col("m"), col("cell"), col("ce"), col("cn"), col("n_vectors"))
       model = next.collect()
+      // a group outside `groups` was never seeded: its rows come back
+      // under an unknown m (with a null cell when the CASE has no branch)
+      val uncovered = model.map(_.getInt(0)).distinct.filterNot(ms.contains)
+      require(uncovered.isEmpty,
+        s"k-means groups ${ms.mkString(",")} do not cover m = ${uncovered.sorted.mkString(",")}")
       r += 1
     }
     (model, schema)

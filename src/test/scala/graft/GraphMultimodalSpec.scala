@@ -48,6 +48,16 @@ class GraphMultimodalSpec extends SparkSpec {
     assert(star == lp)
   }
 
+  test("g_cc_star runs at most 21 Spark jobs per call") {
+    // two contraction rounds, each followed by the star-forest test on
+    // its own output; the loop that stopped on a repeated xor
+    // fingerprint ran one more round and fingerprinted its input: 34
+    val q = Graph.queries("g_cc_star")
+    q(spark, sf).write.mode("overwrite").format("noop").save() // warm
+    val jobs = jobsDuring(q(spark, sf).write.mode("overwrite").format("noop").save())
+    assert(jobs <= 21, s"$jobs jobs")
+  }
+
   test("starContractComponents labels a 200-hop path (where round count ∝ diameter would be 200)") {
     // two long chains + one isolated self-looped node: the alternating
     // star contraction converges in O(log n) rounds regardless of the

@@ -58,17 +58,29 @@ class PropertySpec extends SparkSpec {
         a <- Gen.chooseNum(0, n - 1); b <- Gen.chooseNum(0, n - 1)
       } yield (f"n$a%02d", f"n$b%02d"))
     } yield edges
+    // plus fixed edge cases: an input that is already a star (one
+    // round), parallel duplicate edges, a self-loop-only node next to
+    // an edge, and two disjoint edges
+    val fixed = Seq(
+      Seq(("n00", "n01"), ("n00", "n02"), ("n00", "n03")),
+      Seq(("n01", "n02"), ("n02", "n01"), ("n01", "n02"), ("n02", "n03")),
+      Seq(("n05", "n05"), ("n01", "n02")),
+      Seq(("n00", "n01"), ("n02", "n03")))
     val cases = samples(edgeGen, 4)
     assert(cases.nonEmpty)
-    cases.foreach { edges =>
+    // the last case also runs the checkpointed (`reliable`) path
+    val runs = (fixed ++ cases).map(_ -> false) :+ (cases.last -> true)
+    val ckpt = java.nio.file.Files.createTempDirectory("cc-law").toFile
+    spark.sparkContext.setCheckpointDir(ckpt.toString)
+    try runs.foreach { case (edges, reliable) =>
       val e = edges.toDF("src", "dst")
       val und = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
       val lp = graft.operators.Graph.labelPropagate(und).collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
-      val star = graft.operators.Graph.starContractComponents(und).collect()
+      val star = graft.operators.Graph.starContractComponents(und, reliable).collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(star == lp, s"divergence on edges $edges")
-    }
+      assert(star == lp, s"divergence on edges $edges (reliable = $reliable)")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt)
   }
 
   private val colNameGen = Gen.oneOf("a", "b", "c", "d", "e", "f")

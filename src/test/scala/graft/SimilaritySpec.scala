@@ -817,6 +817,40 @@ class SimilaritySpec extends SparkSpec {
     assert(model.filter(col("n_vectors") =!= 2L).count() == 0)
   }
 
+  test("kmeans seeds follow Spark's order of String and Int id columns") {
+    import spark.implicits._
+    def cell0(pts: org.apache.spark.sql.DataFrame): (Double, Long) = {
+      val r = Similarity.kmeansOf(pts, k = 2, rounds = 2)
+        .filter(col("cell") === 0L && col("dim") === 1L).collect()
+      (r.head.getAs[Double]("centroid"), r.head.getAs[Long]("n_vectors"))
+    }
+    // string order "10" < "100" < "2" < "9" seeds cell 0 at "10", near
+    // the origin; numeric order would seed it at "2", near (5, 5)
+    val byString = Seq(
+      ("10", Array(0.0f, 0.1f)), ("9", Array(0.0f, 0.3f)),
+      ("100", Array(5.0f, 5.1f)), ("2", Array(5.0f, 5.3f)))
+      .toDF("vec_id", "embedding")
+    assert(cell0(byString) == ((0.0, 2L)))
+    val byInt = Seq(
+      (1, Array(0.0f, 0.1f)), (3, Array(0.0f, 0.3f)),
+      (2, Array(5.0f, 5.1f)), (4, Array(5.0f, 5.3f)))
+      .toDF("vec_id", "embedding")
+    assert(cell0(byInt) == ((0.0, 2L)))
+  }
+
+  test("grouped kmeans fails on a group id outside its groups") {
+    import spark.implicits._
+    val v = Seq((0, 0L, Array(0.0f)), (1, 1L, Array(1.0f)), (2, 2L, Array(2.0f)))
+      .toDF("m", "vec_id", "embedding")
+    // several groups (the CASE has no branch for m = 2) and one group
+    // (its model would silently train m = 1 and m = 2 too)
+    Seq(Seq(0, 1) -> "m = 2", Seq(0) -> "m = 1,2").foreach { case (groups, missing) =>
+      val e = intercept[IllegalArgumentException](
+        Similarity.kmeansFitGroupedRows(v, 1, 1, groups))
+      assert(e.getMessage.contains(missing), e.getMessage)
+    }
+  }
+
   test("native graft_polyhash equals the HOF formulation") {
     org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val df = Tables.documents(spark, sf).select(
