@@ -69,7 +69,7 @@ object BenchKit {
     * isn't charged for JVM startup. */
   def warmup(spark: SparkSession, sfDir: String): Unit = {
     spark.range(100000).selectExpr("sum(id)").collect()
-    try { spark.read.parquet(s"$sfDir/region.parquet").count(); () }
+    try { Tables.region(spark, sfDir).count(); () }
     catch { case _: Throwable => () }
   }
 

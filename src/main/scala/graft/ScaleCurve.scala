@@ -38,7 +38,7 @@ object ScaleCurve {
   private val CopyStride = 10000000L
 
   private def replicate(s: SparkSession, src: String, out: String, k: Int): Unit = {
-    val docs = s.read.parquet(s"$src/documents.parquet")
+    val docs = Tables(s, src, "documents")
     val docCopies = (0 until k).map { i =>
       val salted =
         if (i == 0) col("text")
@@ -51,7 +51,7 @@ object ScaleCurve {
     docCopies.reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
 
-    val emb = s.read.parquet(s"$src/embeddings.parquet")
+    val emb = Tables(s, src, "embeddings")
     val embCopies = (0 until k).map { i =>
       val vec =
         if (i == 0) col("embedding")
@@ -67,7 +67,7 @@ object ScaleCurve {
     // stride per copy), so every join shape keeps its selectivity while
     // volume grows k-fold. nation/region stay verbatim (true dimensions).
     def offsetCopy(table: String, keys: Seq[String]): Unit = {
-      val df = s.read.parquet(s"$src/$table.parquet")
+      val df = Tables(s, src, table)
       (0 until k).map { i =>
         keys.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(i * CopyStride)))
       }.reduce(_ unionByName _)
@@ -84,14 +84,14 @@ object ScaleCurve {
     // copy, distinct users/ids — event DENSITY grows with volume, the
     // realistic stream shape.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = s.read.parquet(s"$src/events.parquet")
+    val ev = Tables(s, src, "events")
     (0 until k).map(i => ev
       .withColumn("event_id", col("event_id") + lit(i * CopyStride))
       .withColumn("user_id", col("user_id") + lit(i * CopyStride)))
       .reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
     for (t <- Seq("nation", "region"))
-      s.read.parquet(s"$src/$t.parquet")
+      Tables(s, src, t)
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
   }
 

@@ -1,6 +1,11 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the harness parquet tables (TESTDATA.md).
   *
@@ -8,14 +13,71 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * access goes through here so the scan surface stays uniform (parquet,
   * column-pruned + filter-pushed by Catalyst — verify with
   * `.explain("formatted")`: `PushedFilters` / `ReadSchema`).
+  *
+  * Schemas are inferred once per file version. A plain
+  * `spark.read.parquet` runs a whole Spark job (the parallel footer
+  * merge) before the query starts; the pipelines read one or two tables
+  * per step, so those jobs were 14 of the 33 in a warm `hicsa_etl` pass.
+  * [[apply]] infers with Spark's own reader the first time and then
+  * reads with that schema, which starts no job. The cache is keyed by
+  * what the inferred schema depends on:
+  *  - the table's files: qualified path plus each leaf file's name,
+  *    length and modification time, so a rewritten table is a new key;
+  *  - the session's `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*`
+  *    settings, so flipping `nanosAsLong` (see [[events]]) is a new key.
+  * The files are listed before every read and a cached schema is used
+  * only for the exact listing it was inferred from, so it cannot go
+  * stale: Spark writes a table under new file names, and a file
+  * rewritten in place gets a new modification time. (A file changed
+  * between the listing and the inference leaves an entry that no later
+  * listing matches.) It holds StructTypes only — no session, no
+  * DataFrame, no plan — one per (path, settings), replaced when the
+  * files change. A missing table skips the cache, so the read fails as
+  * Spark's does (`PATH_NOT_FOUND`).
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private final case class Version(files: Seq[(String, Long, Long)], schema: StructType)
+  private val schemas = new ConcurrentHashMap[(String, Seq[(String, String)]), Version]()
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    fileVersion(spark, path) match {
+      case None => spark.read.parquet(path) // missing: Spark's own PATH_NOT_FOUND
+      case Some((qualified, files)) =>
+        val key = (qualified, parquetSettings(spark))
+        val schema = Option(schemas.get(key)).filter(_.files == files).fold {
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(key, Version(files, inferred))
+          inferred
+        }(_.schema)
+        spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** The qualified path and its leaf files' (name, length, modification
+    * time) — a single file lists itself — or None when it does not exist. */
+  private def fileVersion(spark: SparkSession, path: String): Option[(String, Seq[(String, Long, Long)])] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    try {
+      val it = fs.listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some((fs.makeQualified(p).toString, files.result()))
+    } catch { case _: FileNotFoundException => None }
+  }
+
+  private def parquetSettings(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")

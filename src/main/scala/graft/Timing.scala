@@ -32,7 +32,7 @@ object Timing {
     t("pair dot")(v.crossJoin(broadcast(q)).select(expr(dot).as("d")).agg(sum("d")).collect()(0))
     t("full s_cosine_topk")(SparkEntry.queries("s_cosine_topk")(spark, sfDir).collect().length)
     t("full s_cosine_topk 2nd")(SparkEntry.queries("s_cosine_topk")(spark, sfDir).collect().length)
-    val sh = spark.read.parquet(s"$sfDir/documents.parquet")
+    val sh = Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(expr(
         """array_distinct(CASE WHEN size(split(regexp_replace(lower(text), '[\\p{Punct} ]+', ' '), ' ')) >= 5
           |THEN transform(sequence(1, size(split(regexp_replace(lower(text), '[\\p{Punct} ]+', ' '), ' ')) - 4),

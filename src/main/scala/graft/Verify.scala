@@ -1,15 +1,26 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json (always every query's oracle), for a DuckDB compare
+  * (`tools/check.py`).
+  *
+  * Usage: `graft.Verify <sfDir> <outDir> [name,name,...]` — the optional
+  * third argument runs only the named queries. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val (sfDir, outDir) = (args(0), args(1))
+    val all = SparkEntry.queries
+    val queries = args.lift(2).fold(all) { list =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- all.keySet
+      require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      all.filter { case (name, _) => names(name) }
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // the bench's session: same thread cap, config and codegen reuse
     val spark = BenchKit.session(cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -21,8 +21,10 @@ object SqlSurface {
   type Q = (SparkSession, String) => DataFrame
 
   /** Register every harness table as a temp view — UNCONDITIONALLY.
-    * Registration is a schema-footer read, cheap relative to any query;
-    * the r2 memo (a SparkSession-keyed TrieMap) both strongly retained
+    * Registration starts no Spark job once warm: each view is a
+    * `Tables` read, whose schema is inferred once per file version (a
+    * plain `spark.read.parquet` would run one footer-merge job per
+    * table, ten per query). The r2 memo (a SparkSession-keyed TrieMap) both strongly retained
     * sessions forever and served stale views when files under the same
     * dir changed (ADVICE r3). The events table goes through its typed
     * loader so SQL users see a real timestamp column (nanos parquet →

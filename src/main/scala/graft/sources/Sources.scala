@@ -81,9 +81,7 @@ object Sources {
     * one tight key range — min/max row-group stats then prune scans for
     * key-range predicates (the layout half of predicate pushdown). */
   def writeSortedByKey(df: DataFrame, path: String, key: String, numFiles: Int): Unit =
-    df.repartitionByRange(numFiles, org.apache.spark.sql.functions.col(key))
-      .sortWithinPartitions(key)
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    writeKeyRanges(df, org.apache.spark.sql.functions.col(key), numFiles, path)
 
   /** Z-ORDERED scan layout — multi-dimensional pruning for a 100 TB
     * lake: [[writeSortedByKey]] serves ONE filter key; interleaving the
@@ -124,10 +122,31 @@ object Sources {
         shiftleft(shiftright(bucketCol, i).bitwiseAND(lit(1L)), i * nDims + (nDims - 1 - d))
       }
     }
-    df.withColumn("__z", zTerms.reduce(_ + _))
-      .repartitionByRange(numFiles, org.apache.spark.sql.functions.col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
+    writeKeyRanges(df, zTerms.reduce(_ + _), numFiles, path)
+  }
+
+  /** Write `df` as at most `numFiles` files, file i holding the i-th of
+    * `numFiles` equal-count ranges of `key` (nulls in the first), sorted
+    * by `key` within the file. The boundaries come from `approxQuantile`
+    * and rows reach their file through an identity partitioner, so the
+    * layout depends on the input alone. `repartitionByRange` would not
+    * do: it samples with a seed taken from the RDD id, so the same input
+    * would be laid out differently depending on how many RDDs the
+    * session had already built. */
+  private def writeKeyRanges(df: DataFrame, key: org.apache.spark.sql.Column,
+      numFiles: Int, path: String): Unit = {
+    import org.apache.spark.sql.functions._
+    val keyed = df.withColumn("__key", key)
+    val probs = (1 until numFiles).map(_.toDouble / numFiles).toArray
+    val bounds = keyed.stat.approxQuantile("__key", probs, 0.001).distinct
+    val filed = keyed.withColumn("__file",
+      bounds.foldLeft(lit(0))((n, b) => n + when(col("__key") >= b, 1).otherwise(0)))
+    val file = filed.schema.fieldIndex("__file")
+    // HashPartitioner maps an Int key k in [0, numFiles) to partition k
+    val rows = filed.rdd.keyBy(_.getInt(file))
+      .partitionBy(new org.apache.spark.HashPartitioner(numFiles)).values
+    df.sparkSession.createDataFrame(rows, filed.schema)
+      .sortWithinPartitions("__key").drop("__key", "__file")
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
 

@@ -113,14 +113,15 @@ object EventStreams {
 
   /** Streaming source over the events parquet with event-time watermark;
     * feed it to [[tumbling]]/[[sliding]]/[[sessions]] unchanged.
-    * Streaming file sources require an explicit schema; take it from
-    * the file footer (a metadata-only batch read) so the ts physical
-    * type — nanos-long vs TIMESTAMP_NTZ, see Tables.events — is
-    * whatever this data generation actually wrote, then normalize it
-    * with the same shared column as the batch loader. */
+    * Streaming file sources require an explicit schema; take the one
+    * the batch loader resolved for the file (`Tables`, inferred once per
+    * file version) so the ts physical type — nanos-long vs
+    * TIMESTAMP_NTZ, see Tables.events — is whatever this data
+    * generation actually wrote, then normalize it with the same shared
+    * column as the batch loader. */
   def eventStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = s.read.parquet(s"$dir/events.parquet").schema
+    val fileSchema = graft.Tables(s, dir, "events").schema
     s.readStream
       .schema(fileSchema)
       .option("pathGlobFilter", "events.parquet")

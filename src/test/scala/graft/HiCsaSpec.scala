@@ -209,6 +209,25 @@ class HiCsaSpec extends SparkSpec {
     }
   }
 
+  test("the range writers lay out an input the same way whatever the session ran before") {
+    // Spark's range exchange seeds its sample with the RDD id; 6000 rows
+    // is more than it samples for 16 files, so that layout moved with
+    // the number of RDDs built before the write
+    val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
+    def layout(write: String => Unit): Seq[(Long, Long, Long)] = {
+      spark.sparkContext.parallelize(1 to 2) // one more RDD id
+      val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
+      write(dir)
+      spark.read.parquet(dir).groupBy(col("_metadata.file_path"))
+        .agg(min("l_orderkey"), max("l_orderkey"), count(lit(1))).collect()
+        .map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSeq.sorted
+    }
+    val sorted = (d: String) => Sources.writeSortedByKey(li, d, "l_orderkey", 16)
+    val z = (d: String) => Sources.writeZOrdered(li, d, Seq("l_orderkey", "l_partkey"), 16)
+    assert(layout(sorted) == layout(sorted))
+    assert(layout(z) == layout(z))
+  }
+
   test("writeZOrdered clusters BOTH keys: a range filter on either dim touches few files") {
     val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
     val nFiles = 16

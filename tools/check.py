@@ -15,7 +15,8 @@ types both read paths render identically: DOUBLE, BIGINT, VARCHAR,
 BOOLEAN, DATE/TIMESTAMP. No decimals, no arrays (ndarray cells crash
 sort_values) in final outputs.
 
-Usage: python3 tools/check.py [sfdir] [--only q1_agg,q2_...] [--skip-verify]
+Usage: python3 tools/check.py [sfdir] [--only=q1_agg,q2_...] [--skip-verify]
+(--only runs Verify on the named queries alone and diffs just those)
 """
 import duckdb, json, math, os, subprocess, sys, glob
 import pandas as pd
@@ -49,7 +50,8 @@ def run_verify():
     cp = f"{REPO}/target/scala-2.13/classes:" + ":".join(glob.glob("/opt/spark/jars/*.jar"))
     cmd = (["java"] + ADD_OPENS +
            ["-Xmx8g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-            "-cp", cp, "graft.Verify", SF, OUT])
+            "-cp", cp, "graft.Verify", SF, OUT] +
+           ([",".join(sorted(ONLY))] if ONLY else []))
     env = dict(os.environ, SPARK_GRAFT_CPUS="8")
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
     for line in r.stderr.splitlines():
