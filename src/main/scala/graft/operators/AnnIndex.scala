@@ -48,16 +48,13 @@ import org.apache.spark.sql.functions._
   *                    derive centroids from the LATEST stats, so cell
   *                    selection matches a rebuilt index exactly
   *                    (spec-pinned).
-  *  - `_GRAFT_IVF_MANIFEST`  `gen` + the ordered data-dir list,
-  *                    published with an ATOMIC temp-file move (the
-  *                    [[Similarity.cachedIndex]] discipline): readers
-  *                    resolve the index through it and never observe a
-  *                    half-written generation. Writers serialize on
-  *                    the root's [[PublishLock]] (held across
-  *                    read-manifest → write-gen → publish, so
-  *                    interleaved upserts BOTH land); the post-publish
-  *                    read-back stays as the backstop against a
-  *                    lock-bypassing writer.
+  *  - `_GRAFT_IVF_MANIFEST`  `gen` + the ordered data-dir list (+ `.v<gen>`
+  *                    snapshots): readers resolve the index through it
+  *                    and never observe a half-written generation;
+  *                    writers hold the root's [[PublishLock]] across
+  *                    read-manifest → write-gen → publish. Publish,
+  *                    snapshots, rollback, GC and pins are
+  *                    [[VersionedRoot]]'s.
   *
   * Centroid exactness holds under pure APPENDS (all-new vec_ids — the
   * spec-pinned case). A re-sent vec_id is still served correctly
@@ -74,8 +71,6 @@ import org.apache.spark.sql.functions._
   * directory listing each) — compact by rebuilding when deltas
   * accumulate, exactly like any LSM-shaped store. */
 object AnnIndex {
-
-  private val ManifestName = "_GRAFT_IVF_MANIFEST"
 
   private def dot(a: String, b: String): String = Similarity.foldDot(a, b)
 
@@ -119,97 +114,49 @@ object AnnIndex {
   private def booksDirOf(lines: Seq[String]): String =
     lines.find(_.startsWith("books:")).map(_.stripPrefix("books:")).getOrElse("codebooks")
 
-  /** Manifest IO goes through Hadoop's FileSystem/FileContext layer so
-    * a non-local `root` (hdfs://…) works like the parquet generations
-    * do; FileContext rename with OVERWRITE is atomic on HDFS and
-    * local filesystems (object stores without atomic rename need an
-    * external publish lock, as the class doc's concurrency note
-    * already requires). */
-  private def readManifest(s: SparkSession, root: String): Option[(Long, Seq[String])] = {
-    val path = new org.apache.hadoop.fs.Path(root, ManifestName)
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.isFile(path)) None
-    else {
-      val in = fs.open(path)
-      val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-        finally in.close()
-      val lines = new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
-      lines.headOption.flatMap(h => scala.util.Try(h.toLong).toOption)
-        .map(gen => (gen, lines.drop(1)))
-    }
-  }
+  /** Every root-level dir one manifest state references: its
+    * data/code/tomb dirs, its generation's stats, and its quantizer
+    * dirs (versioned via `seeds:`/`books:` lines after a retraining
+    * compaction, the founding `seeds`/`codebooks` otherwise). */
+  private def refsOf(g: Long, ls: Seq[String]): Set[String] =
+    dataDirsOf(ls).toSet ++
+      dataDirsOf(ls).map(_.replaceFirst("^data-", "codes-")) ++
+      tombDirsOf(ls) + s"stats-$g" + seedsDirOf(ls) + booksDirOf(ls)
 
-  /** SNAPSHOT manifests (the [[TextIndex]] time-travel discipline):
-    * every publish also writes an immutable `.v<gen>` copy so a
-    * training run can PIN the index state it probed ([[probe]]'s
-    * `asOf`); [[sweepUnreferenced]] expires snapshots past its grace
-    * (pass 1) and then keeps every dir any retained snapshot still
-    * references (pass 2) — snapshot retention is the same knob as
-    * generation GC. */
-  private def versionName(v: Long) = s"$ManifestName.v$v"
+  // The manifest is the generation number, then the lines above.
+  // Publish, snapshots (version = that generation), rollback, GC and
+  // pins are the shared [[VersionedRoot]] lifecycle; versioned
+  // quantizer dirs (seeds-N/codebooks-N, retrain leftovers) sweep like
+  // generations, while the founding un-versioned `seeds`/`codebooks`
+  // never match the pattern.
+  private val Versions = new VersionedRoot("_GRAFT_IVF_MANIFEST",
+    refsOf = ls => refsOf(ls.head.toLong, ls.drop(1)),
+    dataDir = "(data|codes|tombs|stats|seeds|codebooks)-\\d+".r)
 
-  private def readManifestAsOf(s: SparkSession, root: String,
-      v: Long): (Long, Seq[String]) = {
-    val p = new org.apache.hadoop.fs.Path(root, versionName(v))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.isFile(p),
-      s"no retained snapshot v$v at $root — it never existed, or sweepUnreferenced " +
-        "already dropped it past the retention grace window")
-    val in = fs.open(p)
-    val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      finally in.close()
-    val lines = new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
-    (lines.head.toLong, lines.drop(1))
-  }
+  private def parsed(lines: Seq[String]): Option[(Long, Seq[String])] =
+    lines.headOption.flatMap(h => scala.util.Try(h.toLong).toOption)
+      .map(gen => (gen, lines.drop(1)))
 
-  /** The live manifest, or a retained snapshot's — `asOf` is the
-    * probe-time pin ([[probe]]/[[probeAdc]]); a snapshot's gens,
-    * stats, and quantizers stay readable until the sweep expires it. */
+  private def readManifest(s: SparkSession, root: String): Option[(Long, Seq[String])] =
+    parsed(Versions.live(s, root))
+
+  /** The live manifest, or retained snapshot `v`'s (`asOf`, the
+    * probe-time pin of [[probe]]/[[probeAdc]]): a snapshot's gens,
+    * stats and quantizers stay readable until the sweep expires it. */
   private def resolveManifest(s: SparkSession, root: String,
       asOf: Option[Long]): Option[(Long, Seq[String])] =
-    asOf match {
-      case None => readManifest(s, root)
-      case Some(v) => Some(readManifestAsOf(s, root, v))
-    }
+    asOf.fold(readManifest(s, root))(v => parsed(Versions.asOf(s, root, v)))
 
   /** The retained snapshot versions at `root`, ascending. */
-  def snapshots(s: SparkSession, root: String): Seq[Long] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) Seq.empty
-    else fs.listStatus(rootPath).toSeq.map(_.getPath.getName)
-      .filter(_.matches(java.util.regex.Pattern.quote(ManifestName) + "\\.v\\d+"))
-      .map(_.substring(ManifestName.length + 2).toLong).sorted
-  }
+  def snapshots(s: SparkSession, root: String): Seq[Long] = Versions.snapshots(s, root)
+
+  /** The live index version: the manifest's generation line. */
+  def currentVersion(s: SparkSession, root: String): Long =
+    Versions.currentVersion(s, root, _.head.toLong)
 
   private def writeManifest(s: SparkSession, root: String, gen: Long,
       lines: Seq[String]): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    fs.mkdirs(rootPath)
-    val tmp = new org.apache.hadoop.fs.Path(rootPath, s".manifest-${System.nanoTime()}")
-    val out = fs.create(tmp, true)
-    try out.write((gen.toString +: lines).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(rootPath.toUri, conf)
-    fc.rename(tmp, new org.apache.hadoop.fs.Path(rootPath, ManifestName),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    // the immutable snapshot copy — after the live move, so a crash
-    // between the two costs only the snapshot; a replay rewrites
-    // identical bytes
-    val snap = fs.create(new org.apache.hadoop.fs.Path(rootPath, versionName(gen)), true)
-    try snap.write((gen.toString +: lines).mkString("\n").getBytes("UTF-8"))
-    finally snap.close()
-    // one-writer-per-root safety net (the TextIndex.publish discipline):
-    // re-read after the atomic move — a concurrent publisher landing
-    // after ours silently dropped this generation's line; surface the
-    // violated contract instead of losing data quietly
-    val seen = readManifest(s, root)
-    if (!seen.contains((gen, lines)))
-      throw new IllegalStateException(
-        s"concurrent manifest publish detected at $root (wrote gen $gen, read back " +
-          s"${seen.map(_._1)}) — serialize index writers (one per root)")
+    Versions.publish(s, root, gen.toString +: lines, gen); ()
   }
 
   /** `(vec_id, label, embedding)` → `(vec_id, label, embedding, nrm)`
@@ -429,7 +376,7 @@ object AnnIndex {
     * must not erase the tag — a crash replay of that batch would
     * re-apply it and double-merge its rows and stats. */
   private[graft] def batchApplied(s: SparkSession, root: String, tag: String): Boolean =
-    readManifest(s, root).exists(_._2.contains(s"batch:$tag"))
+    Versions.batchApplied(s, root, tag)
 
   /** Latest-event-wins resolution over generation dirs plus
     * tombstones, optionally restricted to `cells` (the probed-cell
@@ -481,7 +428,7 @@ object AnnIndex {
     * embedding payload is never read) + one full-outer join. */
   def snapshotDiff(s: SparkSession, root: String, v1: Long, v2: Long): DataFrame = {
     def state(v: Long): DataFrame = {
-      val (_, lines) = readManifestAsOf(s, root, v)
+      val (_, lines) = resolveManifest(s, root, Some(v)).get
       val rows = dataDirsOf(lines).map(d => s.read.parquet(s"$root/$d")
           .select(col("vec_id"), col("gen"), lit(false).as("is_tomb")))
         .reduce(_ unionByName _)
@@ -925,112 +872,40 @@ object AnnIndex {
     else None
   }
 
-  /** GC for unreferenced generation dirs at `root` (compaction leaves
-    * the folded `data-/codes-/tombs-/stats-` dirs behind by design —
-    * readers resolve through the manifest): delete every generation
-    * dir absent from the LIVE manifest's reference set and untouched
-    * past `graceMs` (a concurrent reader holding an older manifest
-    * gets the grace window — the [[Similarity.cachedIndex]] 30-minute
-    * discipline). Referenced set: the manifest's `data-N`/`tombs-N`
-    * lines, their `codes-N` twins, and the current generation's
-    * `stats-N`. Uses the Hadoop FS layer like the manifest IO, so a
-    * non-local root sweeps too. Returns deleted dir names. */
-  /** Every root-level dir one manifest state references: its
-    * data/code/tomb dirs, its generation's stats, and its quantizer
-    * dirs (versioned via `seeds:`/`books:` lines after a retraining
-    * compaction, the founding `seeds`/`codebooks` otherwise). */
-  private def refsOf(g: Long, ls: Seq[String]): Set[String] =
-    dataDirsOf(ls).toSet ++
-      dataDirsOf(ls).map(_.replaceFirst("^data-", "codes-")) ++
-      tombDirsOf(ls) + s"stats-$g" + seedsDirOf(ls) + booksDirOf(ls)
-
   /** RESTORE the live index to retained snapshot `v` — the Delta
-    * RESTORE shape, the [[TextIndex.rollbackTo]] twin: the snapshot's
-    * manifest (generation counter, data/tomb dirs, quantizer
-    * pointers, AND the idempotence ledger) becomes the live one
-    * again; snapshots after `v` and the dirs only they referenced are
-    * deleted IMMEDIATELY, no grace — the next publish reuses those
-    * generation numbers, and a reused dir name over surviving stale
-    * data would silently corrupt later time travel. History at and
-    * before `v` stays probeable via `asOf`. Holds the publish lock.
-    * A streaming ingest whose batches were rolled back must reset its
-    * checkpoint too — the rolled-back ledger means a replay
-    * re-applies them, by design. */
+    * RESTORE shape: the snapshot's manifest (generation counter,
+    * data/tomb dirs, quantizer pointers, AND the idempotence ledger)
+    * becomes live again; the suffix snapshots and the dirs only they
+    * referenced go at once (order and crash behaviour:
+    * [[VersionedRoot]]). A streaming ingest whose batches were rolled
+    * back must reset its checkpoint too — the rolled-back ledger means
+    * a replay re-applies them, by design. */
   def rollbackTo(s: SparkSession, root: String, v: Long): Unit =
-    PublishLock.withLock(s, root) {
-      Pins.requireUnpinned(s, root, snapshots(s, root).filter(_ > v))
-      val (gen, lines) = readManifestAsOf(s, root, v)
-      writeManifest(s, root, gen, lines)
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      snapshots(s, root).filter(_ > v).foreach { x =>
-        fs.delete(new org.apache.hadoop.fs.Path(rootPath, versionName(x)), false); ()
-      }
-      val keep = refsOf(gen, lines) ++ snapshots(s, root).flatMap { x =>
-        val (g, ls) = readManifestAsOf(s, root, x); refsOf(g, ls)
-      }
-      fs.listStatus(rootPath).toSeq.foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory &&
-            n.matches("(data|codes|tombs|stats|seeds|codebooks)-\\d+") &&
-            !keep(n)) {
-          fs.delete(st.getPath, true); ()
-        }
-      }
-    }
+    Versions.rollbackTo(s, root, v)
 
+  /** GC for the index root ([[VersionedRoot]]'s sweep): snapshots past
+    * `graceMs` expire unless pinned (all of them may), then every
+    * generation or quantizer dir no retained manifest references
+    * ([[refsOf]]) and stale temp files go. Compaction leaves folded
+    * dirs behind by design — readers resolve through the manifest.
+    * Returns the deleted names. */
   def sweepUnreferenced(s: SparkSession, root: String,
-      graceMs: Long = 30L * 60 * 1000): Seq[String] = {
-    readManifest(s, root) match {
-      case None => Seq.empty
-      case Some((gen, lines)) =>
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val now = System.currentTimeMillis()
-        // pass 1: expire SNAPSHOT manifests past the retention grace —
-        // except PINNED versions ([[pin]]): a registered training run
-        // outlives the grace window until unpinned, and its dirs
-        // survive via pass 2's retained-snapshot keep set
-        val pinned = Pins.pinnedVersions(s, root).map(versionName)
-        val snapPattern = java.util.regex.Pattern.quote(ManifestName) + "\\.v\\d+"
-        val expired = fs.listStatus(rootPath).toSeq
-          .filter(st => st.isFile && st.getPath.getName.matches(snapPattern) &&
-            !pinned(st.getPath.getName) &&
-            now - st.getModificationTime > graceMs)
-          .map { st => fs.delete(st.getPath, false); st.getPath.getName }
-        // pass 2: keep = the live manifest's references plus every
-        // RETAINED snapshot's (its gens, stats, and quantizers stay
-        // replayable until the snapshot itself expires)
-        val keep = refsOf(gen, lines) ++ snapshots(s, root).flatMap { v =>
-          val (g, ls) = readManifestAsOf(s, root, v); refsOf(g, ls)
-        }
-        expired ++ fs.listStatus(rootPath).toSeq
-          .filter { st =>
-            val n = st.getPath.getName
-            // versioned quantizer dirs (seeds-N/codebooks-N, retrain
-            // leftovers) sweep like generations; the founding
-            // un-versioned `seeds`/`codebooks` never match the pattern
-            st.isDirectory &&
-              n.matches("(data|codes|tombs|stats|seeds|codebooks)-\\d+") &&
-              !keep(n) && now - st.getModificationTime > graceMs
-          }
-          .map { st => fs.delete(st.getPath, true); st.getPath.getName }
-    }
-  }
+      graceMs: Long = 30L * 60 * 1000): Seq[String] =
+    Versions.sweepUnreferenced(s, root, graceMs)
 
-  /** Pin retained snapshot `v` under `tag` — the [[Pins]] training-run
-    * registry: [[sweepUnreferenced]] never expires a pinned version or
-    * GCs its data/code/tomb/quantizer dirs until [[unpin]]. */
+  /** Pin retained snapshot `v` under `tag`: [[sweepUnreferenced]] never
+    * expires a pinned version or GCs its data/code/tomb/quantizer dirs
+    * until [[unpin]]. */
   def pin(s: SparkSession, root: String, tag: String, v: Long): Unit =
-    Pins.pin(s, root, tag, v, x => snapshots(s, root).contains(x))
+    Versions.pin(s, root, tag, v)
 
   /** Release `tag`'s pin; the next sweep past grace may reclaim. */
   def unpin(s: SparkSession, root: String, tag: String): Unit =
-    Pins.unpin(s, root, tag)
+    Versions.unpin(s, root, tag)
 
   /** The live pin registry at `root`: tag → version. */
   def pins(s: SparkSession, root: String): Map[String, Long] =
-    Pins.pins(s, root)
+    Versions.pins(s, root)
 
   /** One deterministic Lloyd refinement of the coarse quantizer over
     * the SURVIVING corpus (the retrain path of [[compact]]): init =

@@ -2,22 +2,23 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Create-exclusive publish lock shared by both persisted-index
-  * lifecycles ([[TextIndex]], [[AnnIndex]]) — the serializer in front
-  * of each root's read-manifest → write-generation → publish critical
-  * section, so two well-behaved writers SERIALIZE instead of one
-  * erroring at the post-publish read-back after its generation bytes
-  * were already written (the read-back stays as the backstop against a
+/** Create-exclusive publish lock shared by all three versioned stores
+  * ([[graft.sources.CorpusStore]], [[TextIndex]], [[AnnIndex]]) — the
+  * serializer in front of each root's read-manifest → write-data →
+  * publish critical section, and around [[VersionedRoot]]'s rollback
+  * and pin writes, so two well-behaved writers SERIALIZE instead of one
+  * erroring at the post-publish read-back after its data bytes were
+  * already written (the read-back stays as the backstop against a
   * writer that bypasses the lock).
   *
   * Mechanics: `FileSystem.create(path, overwrite = false)` is atomic
   * create-exclusive on HDFS and local filesystems — exactly one of N
   * racing writers gets the file. A loser polls until `timeoutMs`. A
   * lock older than `staleMs` is presumed abandoned by a crashed writer
-  * and broken (deleted + re-raced): the index itself needs no
+  * and broken (deleted + re-raced): the store itself needs no
   * recovery, because a crash mid-critical-section leaves only an
-  * unreferenced generation dir the next writer's `mode-overwrite`
-  * write replaces and [[TextIndex.sweepUnreferenced]] GCs.
+  * unreferenced data dir the next writer's `mode-overwrite` write
+  * replaces and [[VersionedRoot.sweepUnreferenced]] GCs.
   *
   * Everything goes through the Hadoop FS layer, so a non-local root
   * locks the same way the manifest IO reads. Two layers, because

@@ -467,11 +467,7 @@ object TextIndex {
     require(phrase.nonEmpty && phrase.forall(_.nonEmpty),
       "phrase must be non-empty tokens")
     org.apache.spark.sql.graft.GraftFunctions.register(s)
-    val gens = asOf match {
-      case None => readManifest(s, root)
-      case Some(v) => manifestLinesAsOf(s, root, v).filter(_.startsWith("gen-"))
-    }
-    require(gens.nonEmpty, s"no text index at $root — build() first")
+    val gens = gensOf(s, root, asOf)
     val buckets = phrase.map(bucketOf).distinct
     def pruned(sub: String, schema: org.apache.spark.sql.types.StructType) =
       gens.map(g =>
@@ -612,8 +608,6 @@ object TextIndex {
   // Incrementally-maintained index at an explicit root (the AnnIndex
   // generation discipline applied to text, via signed deltas)
   // ----------------------------------------------------------------
-
-  private val ManifestName = "_GRAFT_TEXT_MANIFEST"
 
   /** Format stamp carried by every published explicit-root manifest
     * (`format:<TextIndexVersion>`). The memo-cached form already keys
@@ -783,101 +777,48 @@ object TextIndex {
     }
   }
 
-  // Manifest lines by prefix: `gen-N` directories (ordered) and
-  // `batch:<tag>` idempotence-ledger entries for streaming ingest.
-  // Unknown prefixes are ignored — forward-extensible, like the
-  // AnnIndex manifest. All manifest/publish/sweep IO goes through the
-  // Hadoop FileSystem/FileContext layer (the [[AnnIndex]] discipline)
-  // so a non-local `root` (hdfs://…) works like the parquet
-  // generations already do; FileContext rename with OVERWRITE is
-  // atomic on HDFS and local filesystems, and [[PublishLock]]
-  // serializes writers on stores without atomic create/rename.
-  private def manifestLines(s: SparkSession, root: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(root, ManifestName)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.isFile(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-        finally in.close()
-      new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
-    }
-  }
+  // Manifest lines by prefix: `format:<v>`, `gen-N` directories
+  // (ordered) and `batch:<tag>` idempotence-ledger entries for
+  // streaming ingest; unknown prefixes are ignored. Publish, snapshots
+  // (version = the publish's highest generation number), rollback, GC
+  // and pins are the shared [[VersionedRoot]] lifecycle.
+  private val Versions = new VersionedRoot("_GRAFT_TEXT_MANIFEST",
+    refsOf = _.filter(_.startsWith("gen-")).toSet,
+    dataDir = "gen-\\d+".r,
+    readCheck = requireFormat)
 
-  private def readManifest(s: SparkSession, root: String): Seq[String] = {
-    val lines = manifestLines(s, root)
+  private def genVersion(lines: Seq[String]): Long =
+    lines.filter(_.startsWith("gen-")).map(_.stripPrefix("gen-").toLong).max
+
+  /** Generation dirs of the live manifest (`asOf = None`) or of
+    * retained snapshot `v`, format-checked. */
+  private def gensOf(s: SparkSession, root: String, asOf: Option[Long]): Seq[String] = {
+    val lines = asOf.fold(Versions.live(s, root))(Versions.asOf(s, root, _))
     requireFormat(lines, root)
-    lines.filter(_.startsWith("gen-"))
+    val gens = lines.filter(_.startsWith("gen-"))
+    require(gens.nonEmpty, s"no text index at $root — build() first")
+    gens
   }
 
-  /** SNAPSHOT manifests: every publish also writes an immutable
-    * `_GRAFT_TEXT_MANIFEST.v<N>` copy (N = the publish's generation
-    * number — monotone across upserts/deletes/compactions), so a
-    * training run can PIN the exact index state it read
-    * ([[bm25TopkAtRoot]]'s `asOf`) and reproduce it later — the
-    * Delta/Iceberg time-travel discipline on the manifest level.
-    * Snapshots are retained for [[sweepUnreferenced]]'s grace window
-    * (its pass 1 deletes version files past it; pass 2 then keeps
-    * every generation any RETAINED snapshot still references), so
-    * "how long is a snapshot replayable" is one knob. */
-  private def versionName(v: Long) = s"$ManifestName.v$v"
+  /** The retained snapshot versions at `root`, ascending. Snapshots
+    * live until [[sweepUnreferenced]]'s grace window expires them (or a
+    * pin holds them), so "how long is a snapshot replayable" is one
+    * knob. */
+  def snapshots(s: SparkSession, root: String): Seq[Long] = Versions.snapshots(s, root)
 
-  private def manifestLinesAsOf(s: SparkSession, root: String, v: Long): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(root, versionName(v))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.isFile(p),
-      s"no retained snapshot v$v at $root — it never existed, or sweepUnreferenced " +
-        "already dropped it past the retention grace window")
-    val in = fs.open(p)
-    val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      finally in.close()
-    val lines = new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
-    requireFormat(lines, root)
-    lines
-  }
-
-  /** The retained snapshot versions at `root`, ascending. */
-  def snapshots(s: SparkSession, root: String): Seq[Long] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) Seq.empty
-    else fs.listStatus(rootPath).toSeq.map(_.getPath.getName)
-      .filter(_.matches(java.util.regex.Pattern.quote(ManifestName) + "\\.v\\d+"))
-      .map(_.substring(ManifestName.length + 2).toLong).sorted
-  }
+  /** The live index version: the live manifest's highest generation. */
+  def currentVersion(s: SparkSession, root: String): Long =
+    Versions.currentVersion(s, root, genVersion)
 
   /** RESTORE the live index to retained snapshot `v` — the Delta
-    * RESTORE shape, run after a bad batch lands: the snapshot's
-    * manifest (generations AND the idempotence ledger) becomes the
-    * live one again, then the abandoned suffix — snapshots after `v`
-    * and the generation dirs only they referenced — is deleted
-    * IMMEDIATELY, no grace: the next upsert reuses those generation
-    * numbers, and a reused `gen-N` over a surviving stale dir would
-    * silently corrupt later time travel. History at and before `v`
-    * stays probeable via `asOf`. Holds the publish lock (one
-    * administrative writer). The ledger rolls back with the manifest
-    * BY DESIGN — a deliberately re-sent batch re-applies; a streaming
-    * ingest whose batches were rolled back must reset its checkpoint
-    * or replay re-applies them. */
+    * RESTORE shape, run after a bad batch lands; the suffix snapshots
+    * and the generation dirs only they referenced go at once (order and
+    * crash behaviour: [[VersionedRoot]]). The ledger rolls back with
+    * the manifest BY DESIGN — a deliberately re-sent batch re-applies;
+    * a streaming ingest whose batches were rolled back must reset its
+    * checkpoint or replay re-applies them. */
   def rollbackTo(s: SparkSession, root: String, v: Long): Unit =
-    PublishLock.withLock(s, root) {
-      Pins.requireUnpinned(s, root, snapshots(s, root).filter(_ > v))
-      val lines = manifestLinesAsOf(s, root, v)
-      publish(s, root, lines)
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      snapshots(s, root).filter(_ > v).foreach { x =>
-        fs.delete(new org.apache.hadoop.fs.Path(rootPath, versionName(x)), false); ()
-      }
-      val keep = (lines ++ snapshots(s, root).flatMap(x =>
-        manifestLinesAsOf(s, root, x))).filter(_.startsWith("gen-")).toSet
-      fs.listStatus(rootPath).toSeq.foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.matches("gen-\\d+") && !keep(n)) {
-          fs.delete(st.getPath, true); ()
-        }
-      }
-    }
+    Versions.rollbackTo(s, root, v)
 
   /** Has a streaming batch with this tag already ridden a published
     * manifest? The ledger rides the SAME atomic move as the data, so
@@ -887,49 +828,15 @@ object TextIndex {
     * commit must not make the replay re-apply the batch. */
   private[graft] def batchApplied(s: SparkSession, root: String,
       tag: String): Boolean =
-    manifestLines(s, root).contains(s"batch:$tag")
+    Versions.batchApplied(s, root, tag)
 
-  /** Publish `gens` with an atomic temp-file move — readers resolve
-    * through the manifest and never see a half-written generation
-    * (the [[Similarity.cachedIndex]] marker discipline).
-    *
-    * Writers serialize on the root's [[PublishLock]] (every mutator
-    * below holds it across read-manifest → write-gen → publish); as a
-    * safety net against a writer that bypasses the lock, the manifest
-    * is RE-READ after the move and must equal what this publish wrote
-    * — a concurrent publisher whose move landed after ours silently
-    * dropped our generation line (lost documents), and this check
-    * turns that silence into an error naming the race. */
+  /** Publish `gens0`, stamped with this writer's format version
+    * (idempotent — republished lines already carry it) so
+    * explicit-root readers can refuse incompatible roots loudly. */
   private def publish(s: SparkSession, root: String, gens0: Seq[String]): Unit = {
-    // every publish stamps the manifest with the writer's format
-    // version (idempotent — republished lines already carry it), so
-    // explicit-root readers can refuse incompatible roots loudly
     val gens =
       if (gens0.exists(_.startsWith("format:"))) gens0 else FormatLine +: gens0
-    val conf = s.sparkContext.hadoopConfiguration
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    fs.mkdirs(rootPath)
-    val tmp = new org.apache.hadoop.fs.Path(rootPath, s".manifest-${System.nanoTime()}")
-    val out = fs.create(tmp, true)
-    try out.write(gens.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(rootPath.toUri, conf)
-    fc.rename(tmp, new org.apache.hadoop.fs.Path(rootPath, ManifestName),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    // the immutable snapshot copy (version = this publish's highest
-    // generation number): written AFTER the live move, so a crash
-    // between the two costs only the snapshot, never the index; a
-    // replayed publish rewrites identical bytes
-    val v = gens.filter(_.startsWith("gen-")).map(_.stripPrefix("gen-").toLong).max
-    val snap = fs.create(new org.apache.hadoop.fs.Path(rootPath, versionName(v)), true)
-    try snap.write(gens.mkString("\n").getBytes("UTF-8"))
-    finally snap.close()
-    val seen = manifestLines(s, root)
-    if (seen != gens)
-      throw new IllegalStateException(
-        s"concurrent manifest publish detected at $root: wrote ${gens.mkString(",")} " +
-          s"but read back ${seen.mkString(",")} — serialize index writers (one per root)")
+    Versions.publish(s, root, gens, genVersion(gens)); ()
   }
 
   /** Found a new index at `root` from `docs` (generation 0). */
@@ -970,7 +877,7 @@ object TextIndex {
       .filter(col("tf") > 0)
 
   private def nextGenOf(gens: Seq[String]): String =
-    s"gen-${gens.map(_.stripPrefix("gen-").toLong).max + 1}"
+    s"gen-${genVersion(gens) + 1}"
 
   /** Upsert a batch — new doc_ids append, RE-SENT doc_ids supersede
     * their old version exactly (the old postings are negated in the
@@ -998,7 +905,7 @@ object TextIndex {
     org.apache.spark.sql.graft.GraftFunctions.register(s)
     import s.implicits._
     PublishLock.withLock(s, root) {
-    val lines = manifestLines(s, root)
+    val lines = Versions.live(s, root)
     val gens = lines.filter(_.startsWith("gen-"))
     require(gens.nonEmpty, s"no text index at $root — build() first")
     val next = nextGenOf(gens)
@@ -1070,7 +977,7 @@ object TextIndex {
     val s = ids.sparkSession
     import s.implicits._
     PublishLock.withLock(s, root) {
-    val lines = manifestLines(s, root)
+    val lines = Versions.live(s, root)
     val gens = lines.filter(_.startsWith("gen-"))
     require(gens.nonEmpty, s"no text index at $root — build() first")
     val next = nextGenOf(gens)
@@ -1115,7 +1022,7 @@ object TextIndex {
     org.apache.spark.sql.graft.GraftFunctions.register(s)
     import s.implicits._
     PublishLock.withLock(s, root) {
-    val lines = manifestLines(s, root)
+    val lines = Versions.live(s, root)
     val gens = lines.filter(_.startsWith("gen-"))
     require(gens.nonEmpty, s"no text index at $root — build() first")
     val next = nextGenOf(gens)
@@ -1172,7 +1079,7 @@ object TextIndex {
     * lists exactly what a rollback to `v` would discard. */
   def snapshotDiff(s: SparkSession, root: String, v1: Long, v2: Long): DataFrame = {
     def state(v: Long): DataFrame =
-      manifestLinesAsOf(s, root, v).filter(_.startsWith("gen-"))
+      gensOf(s, root, Some(v))
         .map(g => s.read.schema(DocsSchema).parquet(s"$root/$g/docs"))
         .reduce(_ unionByName _)
         .groupBy(col("doc_id"))
@@ -1195,15 +1102,12 @@ object TextIndex {
     * registry netted (one registry scan; maintenance/audit read, the
     * [[pipelines.Forget]] erasure certificate's text-surface count). */
   def liveDocCount(s: SparkSession, root: String): Long = {
-    val gens = readManifest(s, root)
-    require(gens.nonEmpty, s"no text index at $root — build() first")
-    liveDocs(s, root, gens).count()
+    liveDocs(s, root, gensOf(s, root, None)).count()
   }
 
   def indexStats(s: SparkSession, root: String): DataFrame = {
-    val gens = readManifest(s, root)
-    require(gens.nonEmpty, s"no text index at $root — build() first")
-    val post = gens.map(g => s.read.schema(PostingsSchema).parquet(s"$root/$g/postings"))
+    val post = gensOf(s, root, None)
+      .map(g => s.read.schema(PostingsSchema).parquet(s"$root/$g/postings"))
       .reduce(_ unionByName _)
     post.groupBy(col("bucket"), col("doc_id"), col("term"))
       .agg(count(lit(1)).as("rows"), sum(col("tf")).as("net_tf"))
@@ -1230,64 +1134,29 @@ object TextIndex {
     else None
   }
 
-  /** GC for unreferenced generation dirs (compaction and crashed
-    * writes leave them behind by design — readers resolve through the
-    * manifest): delete every `gen-N` dir absent from the LIVE manifest
-    * and untouched for longer than `graceMs` (a concurrent reader that
-    * resolved an older manifest gets the grace window to finish — the
-    * [[Similarity.cachedIndex]] 30-minute discipline). Also sweeps
-    * orphaned `.manifest-*` temp files from crashed publishes. Goes
-    * through the Hadoop FS layer like the manifest IO ([[AnnIndex
-    * .sweepUnreferenced]] twin — `java.io.File.listFiles` returns null
-    * on a non-local root and would silently no-op the GC). Returns
-    * the deleted names (for audit/spec). */
+  /** GC for the index root ([[VersionedRoot]]'s sweep): snapshots past
+    * `graceMs` expire unless pinned (all of them may), then generation
+    * dirs no retained manifest references and stale temp files go.
+    * Compaction and crashed writes leave such dirs behind by design —
+    * readers resolve through the manifest. Returns the deleted names. */
   def sweepUnreferenced(s: SparkSession, root: String,
-      graceMs: Long = 30L * 60 * 1000): Seq[String] = {
-    val now = System.currentTimeMillis()
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) return Seq.empty
-    // pass 1: expire SNAPSHOT manifests past the retention grace —
-    // this is the snapshot-retention knob (the Delta VACUUM shape):
-    // a snapshot keeps its generations replayable until it expires.
-    // PINNED versions ([[pin]]) never expire whatever the grace — a
-    // registered training run outlives retention until unpinned, and
-    // its generations survive via pass 2's retained-snapshot keep set.
-    val pinned = Pins.pinnedVersions(s, root).map(versionName)
-    val snapPattern = java.util.regex.Pattern.quote(ManifestName) + "\\.v\\d+"
-    val expired = fs.listStatus(rootPath).toSeq
-      .filter(st => st.isFile && st.getPath.getName.matches(snapPattern) &&
-        !pinned(st.getPath.getName) &&
-        now - st.getModificationTime > graceMs)
-      .map { st => fs.delete(st.getPath, false); st.getPath.getName }
-    // pass 2: keep = live manifest ∪ every RETAINED snapshot's gens
-    val retained = snapshots(s, root)
-    val keep = (readManifest(s, root) ++ retained.flatMap(v =>
-      manifestLinesAsOf(s, root, v).filter(_.startsWith("gen-")))).toSet
-    expired ++ fs.listStatus(rootPath).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        val stale = now - st.getModificationTime > graceMs
-        (st.isDirectory && n.matches("gen-\\d+") && !keep(n) && stale) ||
-          (st.isFile && n.startsWith(".manifest-") && stale)
-      }
-      .map { st => fs.delete(st.getPath, true); st.getPath.getName }
-  }
+      graceMs: Long = 30L * 60 * 1000): Seq[String] =
+    Versions.sweepUnreferenced(s, root, graceMs)
 
   /** Pin retained snapshot `v` under `tag`: [[sweepUnreferenced]] will
-    * never expire it (nor GC its generations) until [[unpin]] — the
-    * training-run registry ([[Pins]]), so `asOf = Some(v)` probes stay
-    * replayable for the run's whole life, not just the grace window. */
+    * never expire it (nor GC its generations) until [[unpin]], so
+    * `asOf = Some(v)` probes stay replayable for a training run's whole
+    * life, not just the grace window. */
   def pin(s: SparkSession, root: String, tag: String, v: Long): Unit =
-    Pins.pin(s, root, tag, v, x => snapshots(s, root).contains(x))
+    Versions.pin(s, root, tag, v)
 
   /** Release `tag`'s pin; the next sweep past grace may reclaim. */
   def unpin(s: SparkSession, root: String, tag: String): Unit =
-    Pins.unpin(s, root, tag)
+    Versions.unpin(s, root, tag)
 
   /** The live pin registry at `root`: tag → version. */
   def pins(s: SparkSession, root: String): Map[String, Long] =
-    Pins.pins(s, root)
+    Versions.pins(s, root)
 
   /** BM25 partials over every published generation: postings union
     * bucket-pruned per gen and NETTED per (doc, term) (signed deltas —
@@ -1297,11 +1166,7 @@ object TextIndex {
     * for bit. */
   private def scoredAtRoot(s: SparkSession, root: String,
       terms: Seq[String], asOf: Option[Long] = None): DataFrame = {
-    val gens = asOf match {
-      case None => readManifest(s, root)
-      case Some(v) => manifestLinesAsOf(s, root, v).filter(_.startsWith("gen-"))
-    }
-    require(gens.nonEmpty, s"no text index at $root — build() first")
+    val gens = gensOf(s, root, asOf)
     val buckets = terms.map(bucketOf).distinct
     def pruned(sub: String, schema: org.apache.spark.sql.types.StructType) =
       gens.map(g =>
@@ -1342,11 +1207,7 @@ object TextIndex {
     * `asOf` snapshot pins — with zero extra structures. */
   def bm25fTopkAtRoot(s: SparkSession, root: String, terms: Seq[String],
       k: Int, asOf: Option[Long] = None): DataFrame = {
-    val gens = asOf match {
-      case None => readManifest(s, root)
-      case Some(v) => manifestLinesAsOf(s, root, v).filter(_.startsWith("gen-"))
-    }
-    require(gens.nonEmpty, s"no text index at $root — build() first")
+    val gens = gensOf(s, root, asOf)
     val buckets = terms.map(bucketOf).distinct
     def pruned(sub: String, schema: org.apache.spark.sql.types.StructType) =
       gens.map(g =>
@@ -1394,11 +1255,7 @@ object TextIndex {
   def bm25TopkBatchAtRoot(s: SparkSession, root: String, queries: DataFrame,
       k: Int, asOf: Option[Long] = None): DataFrame = {
     org.apache.spark.sql.graft.GraftFunctions.register(s)
-    val gens = asOf match {
-      case None => readManifest(s, root)
-      case Some(v) => manifestLinesAsOf(s, root, v).filter(_.startsWith("gen-"))
-    }
-    require(gens.nonEmpty, s"no text index at $root — build() first")
+    val gens = gensOf(s, root, asOf)
     val probes = queries
       .select(col("query_id").cast("long").as("query_id"), col("term"))
       .filter(col("term") =!= "")

@@ -93,20 +93,20 @@ object Forget {
       cert.getAs[Long]("v_before"), cert.getAs[Long]("v_after"))
 
     val textRow = textRoot.map { root =>
-      val vb = TextIndex.snapshots(s, root).max
+      val vb = TextIndex.currentVersion(s, root)
       val b = TextIndex.liveDocCount(s, root)
       TextIndex.delete(ids, root)
       val a = TextIndex.liveDocCount(s, root)
-      ("text_index", b, b - a, a, vb, TextIndex.snapshots(s, root).max)
+      ("text_index", b, b - a, a, vb, TextIndex.currentVersion(s, root))
     }
     val annRow = annRoot.map { root =>
       def live() = AnnIndex.driftStats(s, root)
         .agg(sum(col("n_live"))).head().getLong(0)
-      val vb = AnnIndex.snapshots(s, root).max
+      val vb = AnnIndex.currentVersion(s, root)
       val b = live()
       AnnIndex.delete(ids.select(col("doc_id").as("vec_id")), root)
       val a = live()
-      ("ann_index", b, b - a, a, vb, AnnIndex.snapshots(s, root).max)
+      ("ann_index", b, b - a, a, vb, AnnIndex.currentVersion(s, root))
     }
     (Seq(corpusRow) ++ textRow ++ annRow)
       .toDF("surface", "n_before", "n_deleted", "n_after",

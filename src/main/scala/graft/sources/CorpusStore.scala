@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Pins, PublishLock, Similarity}
+import graft.operators.{PublishLock, Similarity, VersionedRoot}
 
 /** Manifest-versioned document lake — the [[graft.operators.TextIndex]]
   * snapshot discipline applied to the CORPUS itself, so a training run
@@ -19,11 +19,9 @@ import graft.operators.{Pins, PublishLock, Similarity}
   *    every segment neither touched (the Iceberg/Delta file-reuse
   *    shape: an append adds ONE segment line, an erasure rewrites ONLY
   *    the segments holding matched docs).
-  *  - `_GRAFT_CORPUS_MANIFEST` — the live version: one `seg-<n>` line
-  *    per member segment, published by atomic rename.
-  *  - `_GRAFT_CORPUS_MANIFEST.v<V>` — immutable snapshot copy per
-  *    publish (V monotone), the [[asOf]]/[[snapshotDiff]]/[[rollbackTo]]
-  *    substrate.
+  *  - `_GRAFT_CORPUS_MANIFEST` (+ `.v<V>` snapshots, V monotone) — one
+  *    `seg-<n>` line per member segment; publish, snapshots, rollback,
+  *    GC and pins are [[graft.operators.VersionedRoot]]'s.
   *
   * Scale shape: [[read]] is a plain multi-dir parquet scan (predicate
   * pushdown, partition pruning, column pruning all intact — the store
@@ -34,10 +32,8 @@ import graft.operators.{Pins, PublishLock, Similarity}
   * handful of segments, not the lake. [[snapshotDiff]] reads only the
   * SYMMETRIC DIFFERENCE of the two manifests' segment sets — versions
   * sharing 99 % of their segments diff in time proportional to what
-  * changed. All manifest IO goes through the Hadoop FS layer (HDFS/
-  * object-store roots work like local), writers serialize on the
-  * root's [[PublishLock]], and readers resolve through the manifest so
-  * a half-written segment is never visible.
+  * changed. Readers resolve through the manifest, so a half-written
+  * segment is never visible.
   *
   * Contract: `doc_id` is unique corpus-wide (appends carry new ids, a
   * re-send is an erase + append); each version holds a doc in exactly
@@ -45,86 +41,42 @@ import graft.operators.{Pins, PublishLock, Similarity}
   */
 object CorpusStore {
 
-  private val ManifestName = "_GRAFT_CORPUS_MANIFEST"
-
-  private def versionName(v: Long) = s"$ManifestName.v$v"
+  /** Manifest IO, snapshots, rollback, GC and pins: the shared
+    * [[VersionedRoot]] lifecycle. A version is the set of `seg-N` lines;
+    * a segment's `_stats`/`_ranges` sidecars die with it (the next
+    * append reuses a dropped segment's number, and a stale sidecar would
+    * serve the dropped segment's stats under the new one's name). */
+  private val Versions = new VersionedRoot("_GRAFT_CORPUS_MANIFEST",
+    refsOf = _.filter(_.startsWith("seg-")).toSet,
+    dataDir = "seg-\\d+".r,
+    companions = g => Seq(s"_stats/$g", s"_ranges/$g"))
 
   private def fsOf(s: SparkSession, root: String) = {
     val p = new org.apache.hadoop.fs.Path(root)
     (p, p.getFileSystem(s.sparkContext.hadoopConfiguration))
   }
 
-  private def readLines(s: SparkSession, p: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem): Seq[String] = {
-    val in = fs.open(p)
-    val bytes = try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      finally in.close()
-    new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
-  }
-
-  /** Live manifest lines; empty when the store doesn't exist yet.
-    * Unknown prefixes are ignored by readers — forward-extensible,
-    * the TextIndex/AnnIndex manifest convention. */
-  private def manifestLines(s: SparkSession, root: String): Seq[String] = {
-    val (rootPath, fs) = fsOf(s, root)
-    val p = new org.apache.hadoop.fs.Path(rootPath, ManifestName)
-    if (!fs.isFile(p)) Seq.empty else readLines(s, p, fs)
-  }
-
   private def liveSegs(s: SparkSession, root: String): Seq[String] =
-    manifestLines(s, root).filter(_.startsWith("seg-"))
+    Versions.live(s, root).filter(_.startsWith("seg-"))
 
-  private def segsAsOf(s: SparkSession, root: String, v: Long): Seq[String] = {
-    val (rootPath, fs) = fsOf(s, root)
-    val p = new org.apache.hadoop.fs.Path(rootPath, versionName(v))
-    require(fs.isFile(p),
-      s"no retained corpus snapshot v$v at $root — it never existed, or it was " +
-        "swept/rolled back")
-    readLines(s, p, fs).filter(_.startsWith("seg-"))
-  }
+  private def segsAsOf(s: SparkSession, root: String, v: Long): Seq[String] =
+    Versions.asOf(s, root, v).filter(_.startsWith("seg-"))
 
   /** Retained snapshot versions at `root`, ascending. */
-  def snapshots(s: SparkSession, root: String): Seq[Long] = {
-    val (rootPath, fs) = fsOf(s, root)
-    if (!fs.exists(rootPath)) Seq.empty
-    else fs.listStatus(rootPath).toSeq.map(_.getPath.getName)
-      .filter(_.matches(java.util.regex.Pattern.quote(ManifestName) + "\\.v\\d+"))
-      .map(_.substring(ManifestName.length + 2).toLong).sorted
-  }
+  def snapshots(s: SparkSession, root: String): Seq[Long] = Versions.snapshots(s, root)
 
-  /** The live corpus version (highest snapshot). */
+  /** The live corpus version (highest snapshot): the corpus manifest
+    * carries no version of its own, so its numbering reads the
+    * snapshot list. */
   def currentVersion(s: SparkSession, root: String): Long = {
     val vs = snapshots(s, root)
     require(vs.nonEmpty, s"no corpus store at $root")
     vs.max
   }
 
-  /** Atomic publish: live manifest moved into place, then the
-    * immutable `.v<V>` snapshot copy (V = previous max + 1). Written
-    * live-first so a crash between the two costs only the snapshot —
-    * the TextIndex publish ordering. Returns the new version. */
-  private def publish(s: SparkSession, root: String,
-      lines: Seq[String]): Long = {
-    val (rootPath, fs) = fsOf(s, root)
-    fs.mkdirs(rootPath)
-    val v = snapshots(s, root).lastOption.getOrElse(0L) + 1
-    val tmp = new org.apache.hadoop.fs.Path(rootPath, s".manifest-${System.nanoTime()}")
-    val out = fs.create(tmp, true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      rootPath.toUri, s.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new org.apache.hadoop.fs.Path(rootPath, ManifestName),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    val snap = fs.create(new org.apache.hadoop.fs.Path(rootPath, versionName(v)), true)
-    try snap.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally snap.close()
-    val seen = manifestLines(s, root)
-    if (seen != lines)
-      throw new IllegalStateException(
-        s"concurrent corpus publish detected at $root — serialize writers (one per root)")
-    v
-  }
+  /** Publish `lines` as version previous-max + 1. */
+  private def publish(s: SparkSession, root: String, lines: Seq[String]): Long =
+    Versions.publish(s, root, lines, snapshots(s, root).lastOption.getOrElse(0L) + 1)
 
   private def nextSegOf(lines: Seq[String]): Long =
     lines.filter(_.startsWith("seg-"))
@@ -134,7 +86,7 @@ object CorpusStore {
   def create(docs: DataFrame, root: String): Long = {
     val s = docs.sparkSession
     PublishLock.withLock(s, root) {
-      require(manifestLines(s, root).isEmpty,
+      require(Versions.live(s, root).isEmpty,
         s"corpus store already exists at $root — use append/forget")
       docs.write.mode("overwrite").parquet(s"$root/seg-0")
       writeSegStats(s, root, "seg-0")
@@ -151,7 +103,7 @@ object CorpusStore {
   def append(docs: DataFrame, root: String, tag: Option[String] = None): Long = {
     val s = docs.sparkSession
     PublishLock.withLock(s, root) {
-      val lines = manifestLines(s, root)
+      val lines = Versions.live(s, root)
       require(lines.nonEmpty, s"no corpus store at $root — create() first")
       val seg = s"seg-${nextSegOf(lines)}"
       docs.write.mode("overwrite").parquet(s"$root/$seg")
@@ -164,7 +116,7 @@ object CorpusStore {
     * manifest? The exactly-once check for foreachBatch replays. */
   private[graft] def batchApplied(s: SparkSession, root: String,
       tag: String): Boolean =
-    manifestLines(s, root).contains(s"batch:$tag")
+    Versions.batchApplied(s, root, tag)
 
   private def readSegs(s: SparkSession, root: String,
       segs: Seq[String]): DataFrame = {
@@ -260,9 +212,9 @@ object CorpusStore {
       tag: Option[String] = None): DataFrame = {
     import s.implicits._
     PublishLock.withLock(s, root) {
-      val lines = manifestLines(s, root)
+      val lines = Versions.live(s, root)
       val segs = lines.filter(_.startsWith("seg-"))
-      val vBefore = snapshots(s, root).max
+      val vBefore = currentVersion(s, root)
       val idsB = broadcast(ids.select(col("doc_id")).distinct()).persist()
       try {
         // segment pruning in ONE job: every segment's doc_id column in
@@ -309,54 +261,14 @@ object CorpusStore {
     }
   }
 
-  /** RESTORE the live corpus to retained snapshot `v`: its manifest
-    * becomes live again, snapshots after `v` are dropped, and segment
-    * dirs only the dropped suffix referenced are deleted IMMEDIATELY
-    * (the next append reuses those segment numbers — a stale survivor
-    * dir would corrupt later time travel; the TextIndex.rollbackTo
-    * rationale). History at and before `v` stays readable via
-    * [[asOf]]. */
-  def rollbackTo(s: SparkSession, root: String, v: Long): Unit =
-    PublishLock.withLock(s, root) {
-      // a rollback may not silently destroy a registered training
-      // run's replay — the pin registry must release the suffix first
-      Pins.requireUnpinned(s, root, snapshots(s, root).filter(_ > v))
-      // restore the FULL snapshot lines — the batch: idempotence
-      // ledger as of v must survive the restore (the TextIndex
-      // rollback rationale: a post-rollback crash replay of a batch
-      // applied before v must still skip)
-      require(segsAsOf(s, root, v).nonEmpty, s"snapshot v$v at $root is empty")
-      val (rp0, fs0) = fsOf(s, root)
-      val lines = readLines(s,
-        new org.apache.hadoop.fs.Path(rp0, versionName(v)), fs0)
-      val (rootPath, fs) = fsOf(s, root)
-      // restore makes snapshot v ITSELF the live state — the live
-      // manifest is written directly, no new .v copy is minted
-      val tmp = new org.apache.hadoop.fs.Path(rootPath, s".manifest-${System.nanoTime()}")
-      val out = fs.create(tmp, true)
-      try out.write(lines.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        rootPath.toUri, s.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, new org.apache.hadoop.fs.Path(rootPath, ManifestName),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      snapshots(s, root).filter(_ > v).foreach { x =>
-        fs.delete(new org.apache.hadoop.fs.Path(rootPath, versionName(x)), false); ()
-      }
-      val keep = (lines ++ snapshots(s, root).flatMap(x => segsAsOf(s, root, x))).toSet
-      fs.listStatus(rootPath).toSeq.foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.matches("seg-\\d+") && !keep(n)) {
-          // sidecars die with their segment (the sweepUnreferenced
-          // discipline): the next append REUSES this segment number,
-          // and if its frame lacks the stats columns writeSegStats
-          // skips — a surviving stale sidecar would then serve the
-          // DELETED segment's stats under the new segment's name
-          deleteSegMeta(fs, root, n)
-          fs.delete(st.getPath, true); ()
-        }
-      }
-    }
+  /** RESTORE the live corpus to retained snapshot `v` (its full
+    * lines, `batch:` ledger included); snapshots after `v` and segments
+    * only they referenced go at once. Order and crash behaviour:
+    * [[VersionedRoot]]. */
+  def rollbackTo(s: SparkSession, root: String, v: Long): Unit = {
+    require(segsAsOf(s, root, v).nonEmpty, s"snapshot v$v at $root is empty")
+    Versions.rollbackTo(s, root, v)
+  }
 
   // ----------------------------------------------------------------
   // Registered oracle query
@@ -440,49 +352,16 @@ object CorpusStore {
     """SELECT doc_id, lang, n_chars FROM documents
       |WHERE doc_id BETWEEN 250 AND 370""".stripMargin
 
-  /** GC for the corpus root — the [[graft.operators.TextIndex
-    * .sweepUnreferenced]] discipline: expire retained snapshots past
-    * the grace window (the Delta-VACUUM retention knob; the CURRENT
-    * version is always kept, so version numbering stays monotone and
-    * a fresh pin is never invalidated by a concurrent sweep), then
-    * delete segment dirs referenced by neither the live manifest nor
-    * any surviving snapshot, plus stale temp manifests. Erasure
-    * rewrites ([[forget]]) orphan their superseded segments into
-    * exactly this path — without the sweep a churning lake's storage
-    * grows with its history, not its size. Returns deleted names. */
+  /** GC for the corpus root ([[VersionedRoot]]'s sweep): expired
+    * snapshots, segments no retained manifest references (with their
+    * sidecars), stale temp files. The CURRENT version never expires, so
+    * version numbering stays monotone and a fresh pin is never
+    * invalidated by a concurrent sweep. Erasure rewrites ([[forget]])
+    * orphan their superseded segments into exactly this path. Returns
+    * deleted names. */
   def sweepUnreferenced(s: SparkSession, root: String,
-      graceMs: Long = 30L * 60 * 1000): Seq[String] = {
-    val now = System.currentTimeMillis()
-    val (rootPath, fs) = fsOf(s, root)
-    if (!fs.exists(rootPath)) return Seq.empty
-    val current = snapshots(s, root).lastOption
-    // PINNED versions never expire, whatever the grace window: a
-    // registered training run's (corpus v, index v) replay outlives
-    // retention until its pin is released ([[pin]]/[[unpin]]). Their
-    // segments survive via pass 2's retained-snapshot keep set.
-    val pinned = Pins.pinnedVersions(s, root).map(versionName(_))
-    val snapPattern = java.util.regex.Pattern.quote(ManifestName) + "\\.v\\d+"
-    val expired = fs.listStatus(rootPath).toSeq
-      .filter(st => st.isFile && st.getPath.getName.matches(snapPattern) &&
-        !current.map(versionName).contains(st.getPath.getName) &&
-        !pinned(st.getPath.getName) &&
-        now - st.getModificationTime > graceMs)
-      .map { st => fs.delete(st.getPath, false); st.getPath.getName }
-    val keep = (liveSegs(s, root) ++ snapshots(s, root)
-      .flatMap(v => segsAsOf(s, root, v))).toSet
-    expired ++ fs.listStatus(rootPath).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        val stale = now - st.getModificationTime > graceMs
-        (st.isDirectory && n.matches("seg-\\d+") && !keep(n) && stale) ||
-          (st.isFile && n.startsWith(".manifest-") && stale)
-      }
-      .map { st =>
-        val n = st.getPath.getName
-        if (n.matches("seg-\\d+")) deleteSegMeta(fs, root, n)
-        fs.delete(st.getPath, true); n
-      }
-  }
+      graceMs: Long = 30L * 60 * 1000): Seq[String] =
+    Versions.sweepUnreferenced(s, root, graceMs, keep = snapshots(s, root).lastOption.toSet)
 
   // ----------------------------------------------------------------
   // Segment compaction (streaming ingest writes one segment per
@@ -511,10 +390,10 @@ object CorpusStore {
       smallSegBytes: Long = 64L * 1024 * 1024): DataFrame = {
     import s.implicits._
     PublishLock.withLock(s, root) {
-      val lines = manifestLines(s, root)
+      val lines = Versions.live(s, root)
       val segs = lines.filter(_.startsWith("seg-"))
       require(segs.nonEmpty, s"no corpus store at $root — create() first")
-      val vBefore = snapshots(s, root).max
+      val vBefore = currentVersion(s, root)
       val (rootPath, fs) = fsOf(s, root)
       val victims = segs.filter { g =>
         fs.getContentSummary(new org.apache.hadoop.fs.Path(rootPath, g))
@@ -555,24 +434,18 @@ object CorpusStore {
     if (small > maxSmallSegments) Some(compact(s, root, smallSegBytes)) else None
   }
 
-  // ----------------------------------------------------------------
-  // Training-run pin registry (shared Pins discipline — see
-  // graft.operators.Pins)
-  // ----------------------------------------------------------------
-
-  /** Pin retained version `v` under `tag`: [[sweepUnreferenced]] will
-    * never expire it (nor GC its segments) until [[unpin]], however
-    * long the training run outlives the grace window. */
+  /** Pin retained version `v` under `tag`: [[sweepUnreferenced]] never
+    * expires it (nor GCs its segments) until [[unpin]]. */
   def pin(s: SparkSession, root: String, tag: String, v: Long): Unit =
-    Pins.pin(s, root, tag, v, x => snapshots(s, root).contains(x))
+    Versions.pin(s, root, tag, v)
 
   /** Release `tag`'s pin; the next sweep past grace may reclaim. */
   def unpin(s: SparkSession, root: String, tag: String): Unit =
-    Pins.unpin(s, root, tag)
+    Versions.unpin(s, root, tag)
 
   /** The live pin registry at `root`: tag → version. */
   def pins(s: SparkSession, root: String): Map[String, Long] =
-    Pins.pins(s, root)
+    Versions.pins(s, root)
 
   // ----------------------------------------------------------------
   // Incremental corpus statistics (manifest-diff maintenance)
@@ -593,13 +466,6 @@ object CorpusStore {
     org.apache.spark.sql.types.StructField("max_id", org.apache.spark.sql.types.LongType)))
 
   private def rangesPath(root: String, seg: String) = s"$root/_ranges/$seg"
-
-  private def deleteSegMeta(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, seg: String): Unit = {
-    fs.delete(new org.apache.hadoop.fs.Path(statsPath(root, seg)), true)
-    fs.delete(new org.apache.hadoop.fs.Path(rangesPath(root, seg)), true)
-    ()
-  }
 
   /** Per-segment stats of ONE segment, computed from its rows — the
     * writer-side function whose output the `_stats/` sidecar caches. */
