@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of a named query.
   * Usage: java ... graft.Explain <queryName>[,<name2>,...] [sfDir] [outDir]
@@ -10,13 +9,8 @@ object Explain {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) Some(args(2)) else None
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's session, so plan dumps show the plans the bench runs
+    val spark = BenchKit.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     names.foreach { name =>
       outDir match {
         case Some(d) =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump the optimized logical plan of EVERY driver collect a
   * query's BUILDER performs (quantizer seeds/rounds, probe plans,
@@ -12,13 +11,8 @@ object ExplainCollects {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outFile = if (args.length > 2) Some(args(2)) else None
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's session, so plan dumps show the plans the bench runs
+    val spark = BenchKit.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val sb = new StringBuilder
     var i = 0
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -38,11 +32,7 @@ object ExplainCollects {
     spark.listenerManager.register(listener)
     SparkEntry.queries(name)(spark, sfDir)
     // drain the async listener bus so every collect is recorded
-    val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-      .invoke(spark.sparkContext)
-    bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      .foreach(_.invoke(bus))
+    org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
     spark.listenerManager.unregister(listener)
     outFile match {
       case Some(f) =>

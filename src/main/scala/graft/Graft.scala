@@ -1115,14 +1115,12 @@ object Graft {
     /** PRODUCTION-depth HITS: double accumulators, unit-max
       * normalization every round (no magnitude growth at any depth),
       * fingerprint convergence with a throwing `maxIters` safety
-      * valve — see [[operators.Graph.hitsConverged]]. Pass a real
-      * `storage` level to cache the link frame across rounds (caller
-      * owns release); the default NONE leaks nothing into a long-lived
-      * session. */
-    def hitsConverged(links: DataFrame, nodes: DataFrame, maxIters: Int = 50,
-        storage: org.apache.spark.storage.StorageLevel =
-          org.apache.spark.storage.StorageLevel.NONE): DataFrame =
-      Graph.hitsConverged(links, nodes, maxIters, storage = storage)
+      * valve — see [[operators.Graph.hitsConverged]]. Leaves nothing
+      * for the caller to release: its per-round local checkpoints drain
+      * through the ContextCleaner. */
+    def hitsConverged(links: DataFrame, nodes: DataFrame,
+        maxIters: Int = 50): DataFrame =
+      Graph.hitsConverged(links, nodes, maxIters)
 
     /** [[hits]] rescaled to unit max (auth_n = auth/max(auth), hub_n =
       * hub/max(hub)) — the comparable-across-graphs view. An edgeless

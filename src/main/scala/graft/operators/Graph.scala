@@ -637,12 +637,7 @@ object Graph {
     * arithmetic is bit-checkable cross-engine); this is the form a
     * 100 TB crawl graph actually runs to a fixpoint. */
   def hitsConverged(links: DataFrame, nodes: DataFrame, maxIters: Int = 50,
-      roundTo: Int = 9,
-      storage: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.NONE,
-      reliable: Boolean = false): DataFrame = {
-    val l = if (storage == org.apache.spark.storage.StorageLevel.NONE) links
-      else links.persist(storage)
+      roundTo: Int = 9, reliable: Boolean = false): DataFrame = {
     def fp(df: DataFrame): (Long, Long, Long) = {
       val r = df.agg(
         count(lit(1)).as("n"),
@@ -661,12 +656,12 @@ object Graph {
     var round = 0
     while (!done && round < maxIters) {
       val authRaw = nodes
-        .join(l.join(scores.select(col("node").as("src"), col("hub")), "src")
+        .join(links.join(scores.select(col("node").as("src"), col("hub")), "src")
           .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("s")),
           Seq("node"), "left")
         .select(col("node"), coalesce(col("s"), lit(0.0)).as("auth"))
       val hubRaw = nodes
-        .join(l.join(authRaw.select(col("node").as("dst"), col("auth")), "dst")
+        .join(links.join(authRaw.select(col("node").as("dst"), col("auth")), "dst")
           .groupBy(col("src").as("node")).agg(sum(col("auth")).as("s")),
           Seq("node"), "left")
         .select(col("node"), coalesce(col("s"), lit(0.0)).as("hub"))

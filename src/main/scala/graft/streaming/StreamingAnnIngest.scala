@@ -1,118 +1,40 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.AnnIndex
 
-/** Continuous ingestion into the persisted ANN index — the streaming
-  * twin of [[AnnIndex.upsert]], closing the loop between the two
-  * production surfaces: a training-data pipeline lands embeddings on a
-  * stream, and the serving index must absorb them without a rebuild.
-  *
-  * Shape: `foreachBatch` — each micro-batch is exactly one index
-  * generation (assign against the FROZEN stored seeds, encode with the
-  * FROZEN stored codebooks, append cell-partitioned files, atomic
-  * manifest move). This is deliberate: the index's unit of isolation
-  * IS the generation, so mapping Spark's unit of streaming isolation
-  * (the micro-batch) one-to-one onto it gives readers the strongest
-  * guarantee available — a probe sees every batch entirely or not at
-  * all, never a half-applied batch.
-  *
-  * Delivery semantics: `foreachBatch` replays a batch after a crash,
-  * and both torn-write cases are inert. Crash BEFORE the manifest
-  * move: the half-written generation directory is unreferenced, and
-  * the replay overwrites it with identical rows (upsert writes
-  * mode-overwrite; assignment and encode are deterministic functions
-  * of the frozen quantizers) before publishing. Crash AFTER the
-  * move: the batch's `batch:stream-<id>` tag rode the ATOMIC manifest
-  * publish, so the replay sees it via `batchApplied` and skips —
-  * which matters beyond row duplication: a blind re-upsert would
-  * merge the batch's component sums into the running centroid stats
-  * a second time, silently drifting probe cell selection from the
-  * full-rebuild means. Exactly-once EFFECT from at-least-once
-  * delivery, the ledger riding the same atomic move as the data.
-  *
-  * Scale: per-batch work is `O(|batch| · cells)` for assignment plus
-  * one write — independent of index size; probes stay pruned to
-  * `nprobe` cells regardless of how many generations streaming has
-  * appended. Compact ([[AnnIndex.compact]]) on whatever cadence
-  * bounds the generation count, exactly like any LSM store behind a
-  * write-ahead stream.
-  */
+/** Continuous ingestion into the persisted ANN index, the streaming
+  * twin of [[AnnIndex.upsert]]: each micro-batch lands as one index
+  * generation (two when it carries both deletes and upserts), assigned
+  * against the FROZEN stored seeds and encoded with the FROZEN stored
+  * codebooks, so a probe sees a batch entirely or not at all. The
+  * batch protocol — tag, ledger skip, latest-per-key reduction, deletes
+  * then upserts — is [[CdcBatch]]'s; the ledger matters beyond row
+  * duplication here, because a re-applied batch would merge its sums
+  * into the running centroid stats twice. Per-batch work is
+  * `O(|batch| · cells)`, independent of index size; compact
+  * ([[AnnIndex.compact]]) on whatever cadence bounds the generation
+  * count. */
 object StreamingAnnIngest {
 
-  /** Attach a streaming `(vec_id, label, embedding)` frame to the
-    * index founded at `root`; every micro-batch upserts as one new
-    * generation. The index must already be [[AnnIndex.build]]t — a
-    * stream cannot found an index because the founding batch FREEZES
-    * both quantizers, a decision that needs the founding corpus in
-    * hand. */
-  def ingest(vectors: DataFrame, root: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // an empty batch must not burn a generation (triggers can fire
-        // with nothing to do), and a replayed batch whose tag already
-        // rode a published manifest must not re-apply (stats would
-        // double-merge)
-        val tag = s"stream-$id"
-        if (!batch.isEmpty &&
-            !AnnIndex.batchApplied(batch.sparkSession, root, tag)) {
-          AnnIndex.upsert(batch, root, Some(tag)); ()
-        }
-      }
-      .start()
+  /** The index as a [[CdcBatch]] surface. */
+  private def surface(root: String): CdcBatch.Surface =
+    CdcBatch.Surface(root, AnnIndex.batchApplied,
+      CdcBatch.deleteThenUpsert(AnnIndex.delete(_, root, _),
+        AnnIndex.upsert(_, root, _)))
 
-  /** CDC ingestion — ONE stream carrying both upserts and deletes:
-    * `(op, vec_id, label, embedding[, seq])` with
-    * `op ∈ {upsert, delete}` (embedding/label null on deletes). Each
-    * micro-batch is first REDUCED to the latest event per vec_id
-    * ([[CdcBatch.latestPerKey]]: `seq` orders events when present;
-    * without it an upsert beats a delete and doubled upserts are
-    * rejected loudly), so the delete and upsert halves are
-    * key-disjoint — two revisions of one vec in a batch can't land as
-    * two "latest" rows, and an upsert-then-delete can't resurrect
-    * through the deletes-first application order. Deletes then apply
-    * FIRST, then upserts — a vec deleted and re-sent in the same
-    * batch nets to the re-send, the CDC latest-wins convention.
-    *
-    * Replay safety extends the [[ingest]] argument: the batch tag
-    * rides the LAST publish of the batch (the upsert half when
-    * present, else the delete half). A crash between the two
-    * publishes replays the batch with no tag recorded — the delete
-    * half re-applies as a pure no-op (its victims are already dead,
-    * [[AnnIndex.delete]] is idempotent), then the upsert half applies
-    * once. A crash after the final publish replays into a
-    * `batchApplied` skip. Exactly-once EFFECT either way, and
-    * foreachBatch's serialized batches are what satisfies the
-    * one-writer-per-root manifest contract. */
-  def cdc(changes: DataFrame, root: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        import org.apache.spark.sql.functions.col
-        val tag = s"cdc-$id"
-        val s = batch.sparkSession
-        if (!batch.isEmpty && !AnnIndex.batchApplied(s, root, tag)) {
-          val b = CdcBatch.latestPerKey(batch, "vec_id").persist()
-          try {
-            val ups = b.filter(col("op") === "upsert")
-              .select(col("vec_id"), col("label"), col("embedding"))
-            val dels = b.filter(col("op") === "delete").select(col("vec_id"))
-            val hasUps = !ups.isEmpty
-            if (!dels.isEmpty)
-              AnnIndex.delete(dels, root, if (hasUps) None else Some(tag))
-            if (hasUps) AnnIndex.upsert(ups, root, Some(tag))
-            ()
-          } finally { b.unpersist(); () }
-        }
-      }
-      .start()
+  /** Attach a streaming `(vec_id, label, embedding)` frame to the index
+    * founded at `root`; every micro-batch upserts as one new
+    * generation. The index must already be [[AnnIndex.build]]t — the
+    * founding batch freezes both quantizers. */
+  def ingest(vectors: DataFrame, root: String, checkpoint: String): StreamingQuery =
+    CdcBatch.ingest(vectors, checkpoint, "vec_id", Seq(surface(root)))
+
+  /** CDC ingestion of `(op, vec_id, label, embedding[, seq])` with
+    * `op ∈ {upsert, delete}` (embedding/label null on deletes), reduced
+    * per batch by [[CdcBatch.latestPerKey]]. */
+  def cdc(changes: DataFrame, root: String, checkpoint: String): StreamingQuery =
+    CdcBatch.cdc(changes, checkpoint, "vec_id", Seq(surface(root)))
 }

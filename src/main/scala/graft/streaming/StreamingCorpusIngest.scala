@@ -2,131 +2,64 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextIndex
 import graft.sources.CorpusStore
 
 /** Continuous ingestion into BOTH document surfaces at once — the
-  * versioned corpus lake ([[CorpusStore]]) AND the BM25 index
+  * versioned corpus lake ([[CorpusStore]]) and the BM25 index
   * ([[TextIndex]]) — so what the lake stores and what retrieval serves
-  * never drift: every micro-batch lands as one corpus version AND one
+  * never drift: every micro-batch lands as one corpus version and one
   * index generation, and the (corpus version, index version) pair
-  * captured after any batch is a consistent training-run pin — both
-  * surfaces reflect exactly the same batch prefix, so the pinned pair
-  * replays byte-identical retrieval over the pinned document set (the
-  * TemporalSamplingSpec law, now maintained live).
-  *
-  * Replay safety is per SURFACE: each root carries its own `batch:`
-  * idempotence ledger riding its own atomic publish, so a crash
-  * between the corpus publish and the index publish replays ONLY the
-  * missing half — the applied surface skips via its ledger, the other
-  * catches up, and the pair is consistent again at batch end.
-  * Exactly-once effect on both surfaces from at-least-once delivery.
-  *
-  * Corpus semantics per batch: re-sent doc_ids are erase + append (the
-  * store's unique-id contract) — the copy-on-write [[CorpusStore
-  * .forget]] touches only the segments holding superseded ids, then
-  * the batch appends as one immutable segment. Index semantics are
-  * [[TextIndex.upsert]]'s signed-delta supersede. Per-batch cost on
-  * both surfaces is batch-sized (plus the touched-segment rewrites),
-  * independent of corpus or index size.
-  */
+  * captured after any batch is a consistent training-run pin. Each
+  * surface keeps its own `batch:` ledger, so a crash between the two
+  * publishes replays only the missing half ([[CdcBatch]] has the
+  * protocol). On the corpus, re-sent doc_ids are erase + append (the
+  * store's unique-id contract): the copy-on-write [[CorpusStore
+  * .forget]] rewrites only the segments holding superseded ids. */
 object StreamingCorpusIngest {
+
+  /** The corpus as a [[CdcBatch]] surface: one erase covers both
+    * halves (deleted ids go, and re-sent upsert ids make room for their
+    * new version), then the upserts append as one segment. */
+  private def surface(root: String): CdcBatch.Surface =
+    CdcBatch.Surface(root, CorpusStore.batchApplied, h => {
+      CorpusStore.forget(h.dels.sparkSession, root,
+        h.ups.fold(h.dels)(u => h.dels.unionByName(u.select(col("doc_id")))),
+        h.delTag)
+      h.ups.foreach(CorpusStore.append(_, root, Some(h.tag)))
+    })
 
   /** Attach a streaming `(doc_id, text)` frame to a corpus store and
     * a text index (both must exist — [[CorpusStore.create]] +
     * [[TextIndex.build]], typically from the same founding frame).
-    * Every micro-batch becomes one corpus version and one index
-    * generation; re-sent ids supersede on both surfaces.
     *
-    * `compactEvery > 0` runs the MAINTENANCE POLICY LOOPS in-cadence,
-    * after every `compactEvery`-th batch's publishes: the corpus
-    * folds its small streamed segments when more than
-    * `maxSmallSegments` have accumulated ([[CorpusStore
-    * .compactIfFragmented]]) and the index folds when its dead-posting
-    * fraction exceeds budget ([[TextIndex.compactIfBloated]]) — so a
-    * long-lived stream's manifest length and read fan-out track corpus
-    * SIZE, not batch history, without an operator running compactions
-    * by hand. Both policies republish with the `batch:` ledger intact
-    * (spec-pinned), so an in-cadence fold between a batch's publish
-    * and its checkpoint commit cannot make a crash replay re-apply
-    * the batch. */
+    * `compactEvery > 0` runs the maintenance policies after every
+    * `compactEvery`-th batch: the corpus folds its small streamed
+    * segments when more than `maxSmallSegments` have accumulated
+    * ([[CorpusStore.compactIfFragmented]]) and the index folds when its
+    * dead-posting fraction exceeds budget
+    * ([[TextIndex.compactIfBloated]]). Both republish with the `batch:`
+    * ledger intact, so a fold between a batch's publish and its
+    * checkpoint commit cannot make a replay re-apply the batch. */
   def ingest(docs: DataFrame, corpusRoot: String, indexRoot: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      compactEvery: Int = 0, maxSmallSegments: Int = 16,
+      checkpoint: String, compactEvery: Int = 0, maxSmallSegments: Int = 16,
       smallSegBytes: Long = 64L * 1024 * 1024): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        val tag = s"stream-$id"
-        if (!batch.isEmpty) {
-          if (!CorpusStore.batchApplied(s, corpusRoot, tag)) {
-            // erase-then-append = upsert under the unique-id contract;
-            // the tag rides the LAST publish, so a replay of a crash
-            // between the two re-runs the erase as a no-op (the ids
-            // are already gone) and lands the append exactly once
-            CorpusStore.forget(s, corpusRoot, batch.select(col("doc_id")))
-            CorpusStore.append(batch, corpusRoot, Some(tag))
-            ()
-          }
-          if (!TextIndex.batchApplied(s, indexRoot, tag)) {
-            TextIndex.upsert(batch, indexRoot, Some(tag)); ()
-          }
-          if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
-            CorpusStore.compactIfFragmented(s, corpusRoot,
-              maxSmallSegments, smallSegBytes)
-            TextIndex.compactIfBloated(s, indexRoot)
-            ()
-          }
-        }
-      }
-      .start()
+    CdcBatch.ingest(docs, checkpoint, "doc_id",
+      Seq(surface(corpusRoot), StreamingTextIngest.surface(indexRoot)),
+      (s, id) =>
+        if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
+          CorpusStore.compactIfFragmented(s, corpusRoot, maxSmallSegments,
+            smallSegBytes)
+          TextIndex.compactIfBloated(s, indexRoot)
+          ()
+        })
 
   /** CDC ingestion of `(op, doc_id, text[, seq])` with
-    * `op ∈ {upsert, delete}` into both surfaces — the
-    * [[StreamingTextIngest.cdc]] reduction and ordering (latest event
-    * per key, deletes before upserts), applied to the lake AND the
-    * index under their independent ledgers. */
+    * `op ∈ {upsert, delete}` into both surfaces. */
   def cdc(changes: DataFrame, corpusRoot: String, indexRoot: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        val tag = s"cdc-$id"
-        if (!batch.isEmpty) {
-          val b = CdcBatch.latestPerKey(batch, "doc_id").persist()
-          try {
-            val ups = b.filter(col("op") === "upsert")
-              .select(col("doc_id"), col("text"))
-            val dels = b.filter(col("op") === "delete").select(col("doc_id"))
-            val hasUps = !ups.isEmpty
-            if (!CorpusStore.batchApplied(s, corpusRoot, tag)) {
-              // one erase pass covers both halves: deleted ids go, and
-              // re-sent upsert ids make room for their new version
-              // (key-disjoint after the CDC reduction, so the order
-              // cannot resurrect a deleted doc)
-              val victims =
-                if (hasUps) dels.unionByName(ups.select(col("doc_id"))) else dels
-              CorpusStore.forget(s, corpusRoot, victims,
-                if (hasUps) None else Some(tag))
-              if (hasUps) { CorpusStore.append(ups, corpusRoot, Some(tag)); () }
-            }
-            if (!TextIndex.batchApplied(s, indexRoot, tag)) {
-              if (!dels.isEmpty)
-                TextIndex.delete(dels, indexRoot, if (hasUps) None else Some(tag))
-              if (hasUps) { TextIndex.upsert(ups, indexRoot, Some(tag)); () }
-            }
-          } finally { b.unpersist(); () }
-        }
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    CdcBatch.cdc(changes, checkpoint, "doc_id",
+      Seq(surface(corpusRoot), StreamingTextIngest.surface(indexRoot)))
 }

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Quality
 
@@ -169,8 +169,7 @@ object StreamingDriftMonitor {
       categoricalCols: Seq[String], valueCols: Seq[String] = Nil,
       sliceCol: Option[String] = None,
       buckets: Int = 10, alert: Double = 0.2,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L))
+      checkpoint: Option[String] = None)
       : (StreamingQuery, DriftMonitor) = {
     val groupCols = sliceCol.toSeq
     def prep(df: DataFrame): DataFrame =
@@ -191,7 +190,7 @@ object StreamingDriftMonitor {
           r.getDouble(off + 1), r.getLong(off + 2))).toSeq
     val m = new DriftMonitor(bc, bv, extents, numericCols, categoricalCols,
       valueCols, sliceCol, buckets, alert)
-    val w0 = stream.writeStream.outputMode("append").trigger(trigger)
+    val w0 = stream.writeStream.outputMode("append")
     val w = checkpoint.fold(w0)(c => w0.option("checkpointLocation", c))
     val q = w.foreachBatch((b: DataFrame, id: Long) => m.absorb(b, id)).start()
     (q, m)

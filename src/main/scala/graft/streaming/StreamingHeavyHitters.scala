@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.util.sketch.CountMinSketch
 
 import graft.operators.TextAnalysis
@@ -107,11 +107,10 @@ object StreamingHeavyHitters {
     * the report at any point. */
   def monitor(stream: DataFrame, k: Int = 2000, eps: Double = 0.001,
       confidence: Double = 0.99, seed: Int = 42,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L))
+      checkpoint: Option[String] = None)
       : (StreamingQuery, HeavyHittersMonitor) = {
     val m = new HeavyHittersMonitor(k, eps, confidence, seed)
-    val w0 = stream.writeStream.outputMode("append").trigger(trigger)
+    val w0 = stream.writeStream.outputMode("append")
     val w = checkpoint.fold(w0)(c => w0.option("checkpointLocation", c))
     val q = w.foreachBatch((b: DataFrame, id: Long) => m.absorb(b, id)).start()
     (q, m)

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Event-time lateness profiling — the measurement that SIZES a
   * watermark instead of guessing it: Spark's windowed aggregations
@@ -95,11 +95,10 @@ object StreamingLateness {
     * column `tsCol`. Default thresholds: 1s, 10s, 60s. */
   def monitor(stream: DataFrame, tsCol: String,
       bucketsMs: Seq[Long] = Seq(1000L, 10000L, 60000L),
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L))
+      checkpoint: Option[String] = None)
       : (StreamingQuery, LatenessMonitor) = {
     val m = new LatenessMonitor(tsCol, bucketsMs.sorted)
-    val w0 = stream.writeStream.outputMode("append").trigger(trigger)
+    val w0 = stream.writeStream.outputMode("append")
     val w = checkpoint.fold(w0)(c => w0.option("checkpointLocation", c))
     val q = w.foreachBatch((b: DataFrame, id: Long) => m.absorb(b, id)).start()
     (q, m)

@@ -1,96 +1,35 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextIndex
 
-/** Continuous ingestion into the persisted BM25 text index — the
-  * [[StreamingAnnIngest]] discipline applied to documents: a corpus
-  * pipeline lands new documents on a stream, and the retrieval index
-  * must absorb them without a rebuild.
-  *
-  * Each micro-batch maps one-to-one onto an index generation (append
-  * signed postings/df/stats/registry deltas, atomic manifest move —
-  * re-sent doc_ids in a batch supersede their old version exactly,
-  * see [[TextIndex]]), so a probe sees a batch entirely or not at
-  * all. Replay safety is the same two-case
-  * argument: a crash BEFORE the manifest move leaves an unreferenced
-  * generation dir that the replay overwrites deterministically; a
-  * crash AFTER the move left the batch's `batch:stream-<id>` tag on
-  * the published manifest, so the replay skips via
-  * [[TextIndex.batchApplied]] — a blind re-apply would count the
-  * batch's postings twice and shift every BM25 df/stats input.
-  * Exactly-once effect from at-least-once delivery, the ledger riding
-  * the same atomic move as the data.
-  *
-  * Per-batch work is one tokenize + aggregate over the batch —
-  * independent of index size; probes stay pruned to the query terms'
-  * buckets regardless of how many generations streaming has appended.
-  */
+/** Continuous ingestion into the persisted BM25 text index: each
+  * micro-batch lands as one index generation (two when it carries both
+  * deletes and upserts), so a probe sees a batch entirely or not at
+  * all; re-sent doc_ids supersede their old version exactly (see
+  * [[TextIndex.upsert]]). The batch protocol — tag, ledger skip,
+  * latest-per-key reduction, deletes then upserts — is [[CdcBatch]]'s.
+  * Per-batch work is one tokenize + aggregate over the batch,
+  * independent of index size. */
 object StreamingTextIngest {
 
-  /** Attach a streaming `(doc_id, text)` frame to the index founded at
-    * `root`; every micro-batch upserts as one new generation. The
-    * index must already be [[TextIndex.build]]t. */
-  def ingest(docs: DataFrame, root: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // an empty batch must not burn a generation; a replayed batch
-        // whose tag already rode a published manifest must not
-        // re-apply (postings would double-count)
-        val tag = s"stream-$id"
-        if (!batch.isEmpty && !TextIndex.batchApplied(batch.sparkSession, root, tag)) {
-          TextIndex.upsert(batch, root, Some(tag)); ()
-        }
-      }
-      .start()
+  /** The index as a [[CdcBatch]] surface. */
+  private[streaming] def surface(root: String): CdcBatch.Surface =
+    CdcBatch.Surface(root, TextIndex.batchApplied,
+      CdcBatch.deleteThenUpsert(TextIndex.delete(_, root, _),
+        TextIndex.upsert(_, root, _)))
 
-  /** CDC ingestion — one stream of `(op, doc_id, text[, seq])` with
-    * `op ∈ {upsert, delete}` (text null on deletes). Each micro-batch
-    * is first REDUCED to the latest event per doc_id ([[CdcBatch
-    * .latestPerKey]]: `seq` orders events when present; without it an
-    * upsert beats a delete and doubled upserts are rejected) — so the
-    * delete and upsert halves are key-disjoint and two revisions of
-    * one doc in a batch can never violate [[TextIndex.upsert]]'s
-    * one-version-per-key contract, nor can an upsert-then-delete
-    * resurrect the row through the deletes-first application order.
-    * Deletes apply first, then upserts; the batch tag rides the LAST
-    * publish, making the replay argument identical to
-    * [[StreamingAnnIngest.cdc]]'s: re-applied deletes are no-ops
-    * against already-dead ids, a tag-bearing publish makes the whole
-    * batch skip — including a MIXED replay batch (the tag covers the
-    * batch as a unit, so its already-applied deletes and upserts skip
-    * together; spec-pinned). The signed-delta upsert path handles
-    * re-sent doc_ids exactly (old postings negated), so a CDC stream
-    * of document REVISIONS is the intended workload, not just
-    * appends. */
-  def cdc(changes: DataFrame, root: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        import org.apache.spark.sql.functions.col
-        val tag = s"cdc-$id"
-        if (!batch.isEmpty && !TextIndex.batchApplied(batch.sparkSession, root, tag)) {
-          val b = CdcBatch.latestPerKey(batch, "doc_id").persist()
-          try {
-            val ups = b.filter(col("op") === "upsert")
-              .select(col("doc_id"), col("text"))
-            val dels = b.filter(col("op") === "delete").select(col("doc_id"))
-            val hasUps = !ups.isEmpty
-            if (!dels.isEmpty)
-              TextIndex.delete(dels, root, if (hasUps) None else Some(tag))
-            if (hasUps) TextIndex.upsert(ups, root, Some(tag))
-            ()
-          } finally { b.unpersist(); () }
-        }
-      }
-      .start()
+  /** Attach a streaming `(doc_id, text)` frame to the index founded at
+    * `root` (already [[TextIndex.build]]t); every micro-batch upserts
+    * as one new generation. */
+  def ingest(docs: DataFrame, root: String, checkpoint: String): StreamingQuery =
+    CdcBatch.ingest(docs, checkpoint, "doc_id", Seq(surface(root)))
+
+  /** CDC ingestion of `(op, doc_id, text[, seq])` with
+    * `op ∈ {upsert, delete}` (text null on deletes), reduced per batch
+    * by [[CdcBatch.latestPerKey]]. */
+  def cdc(changes: DataFrame, root: String, checkpoint: String): StreamingQuery =
+    CdcBatch.cdc(changes, checkpoint, "doc_id", Seq(surface(root)))
 }

@@ -32,7 +32,7 @@ abstract class SparkSpec extends AnyFunSuite {
   /** Spark jobs that `body` starts: a listener counts the job starts
     * tagged with a job group unique to this call, so jobs of other work
     * in the shared session are not counted. The listener bus is drained
-    * (its `waitUntilEmpty` is package-private) before the count is read. */
+    * before the count is read. */
   def jobsDuring(body: => Unit): Int = {
     val sc = spark.sparkContext
     val group = s"jobsDuring-${java.util.UUID.randomUUID()}"
@@ -47,10 +47,7 @@ abstract class SparkSpec extends AnyFunSuite {
     try body
     finally {
       sc.clearJobGroup()
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0).get
-        .invoke(bus)
+      org.apache.spark.sql.graft.ListenerBus.drain(sc)
       sc.removeSparkListener(listener)
     }
     jobs.get

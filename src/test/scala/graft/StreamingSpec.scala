@@ -513,6 +513,94 @@ class StreamingSpec extends SparkSpec {
         live.select(col("doc_id"), col("text")), terms, 10).collect().toSeq)
   }
 
+  test("streamed corpus ingest: a doc_id doubled in one batch fails the query before any publish") {
+    import spark.implicits._
+    val corpus = java.nio.file.Files.createTempDirectory("graft-ing-dup-c").toString
+    val index = java.nio.file.Files.createTempDirectory("graft-ing-dup-i").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ing-dup-ck").toString
+    val v1 = Seq((1L, "vector alpha"), (2L, "hash beta")).toDF("doc_id", "text")
+    sources.CorpusStore.create(v1, corpus)
+    graft.operators.TextIndex.build(v1, index)
+    val vc0 = sources.CorpusStore.currentVersion(spark, corpus)
+    val vi0 = graft.operators.TextIndex.currentVersion(spark, index)
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, String)]
+    val q = streaming.StreamingCorpusIngest.ingest(
+      input.toDF().toDF("doc_id", "text"), corpus, index, ckpt)
+    try {
+      input.addData((5L, "stream five"), (5L, "stream five again"))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    // neither surface published: no version, no ledger line, so the
+    // corpus cannot hold two rows of doc 5 and a replay is not skipped
+    assert(sources.CorpusStore.currentVersion(spark, corpus) == vc0)
+    assert(!sources.CorpusStore.batchApplied(spark, corpus, "stream-0"))
+    assert(graft.operators.TextIndex.currentVersion(spark, index) == vi0)
+    assert(sources.CorpusStore.read(spark, corpus).count() == 2L)
+  }
+
+  test("streaming ANN ingest: a vec_id doubled in one batch fails the query and publishes nothing") {
+    import spark.implicits._
+    val v = Tables.embeddings(spark, sf)
+    val root = java.nio.file.Files.createTempDirectory("graft-ann-dup").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ann-dup-ck").toString
+    Graft.ann.build(v.filter(col("vec_id") <= 100), "vec_id", "embedding", "label", root)
+    def head() = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "_GRAFT_IVF_MANIFEST")), "UTF-8").split("\n").head
+    val head0 = head()
+    val (l150, e150) = v.filter(col("vec_id") === 150L)
+      .select(col("label"), col("embedding"))
+      .as[(Int, Array[Float])].collect()(0)
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, Int, Array[Float])]
+    val q = streaming.StreamingAnnIngest.ingest(
+      input.toDF().toDF("vec_id", "label", "embedding"), root, ckpt)
+    try {
+      input.addData(Seq((150L, l150, e150), (150L, l150, e150)))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(head() == head0)
+    assert(!graft.operators.AnnIndex.batchApplied(spark, root, "stream-0"))
+  }
+
+  test("dual-surface ingest replay: a batch whose corpus half already published lands only on the index") {
+    import spark.implicits._
+    val corpus = java.nio.file.Files.createTempDirectory("graft-ing-rep-c").toString
+    val index = java.nio.file.Files.createTempDirectory("graft-ing-rep-i").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ing-rep-ck").toString
+    val v1 = Seq((1L, "vector alpha"), (2L, "hash beta")).toDF("doc_id", "text")
+    sources.CorpusStore.create(v1, corpus)
+    graft.operators.TextIndex.build(v1, index)
+    // batch 0's corpus half, published as the sink publishes it, then
+    // a crash before the index half: erase the re-sent ids, append
+    // with the tag
+    val batch0 = Seq((2L, "hash beta rev"), (3L, "vector stream gamma"))
+    sources.CorpusStore.forget(spark, corpus, batch0.toDF("doc_id", "text").select("doc_id"))
+    sources.CorpusStore.append(batch0.toDF("doc_id", "text"), corpus, Some("stream-0"))
+    val vHand = sources.CorpusStore.currentVersion(spark, corpus)
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, String)]
+    val q = streaming.StreamingCorpusIngest.ingest(
+      input.toDF().toDF("doc_id", "text"), corpus, index, ckpt)
+    try {
+      input.addData(batch0)
+      q.processAllAvailable()
+    } finally q.stop()
+    // the corpus skipped by its ledger, the index caught up
+    assert(sources.CorpusStore.currentVersion(spark, corpus) == vHand)
+    assert(graft.operators.TextIndex.batchApplied(spark, index, "stream-0"))
+    val live = sources.CorpusStore.read(spark, corpus)
+    assert(live.orderBy("doc_id").collect().toSeq == Seq(Row(1L, "vector alpha"),
+      Row(2L, "hash beta rev"), Row(3L, "vector stream gamma")))
+    val terms = Seq("vector", "hash", "stream")
+    assert(Graft.text.bm25TopkAt(spark, index, terms, 10).collect().toSeq ==
+      graft.operators.TextAnalysis.bm25TopkOf(live, terms, 10).collect().toSeq)
+  }
+
   test("CDC batch reduction: seq orders multiple events per key within one micro-batch") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-text-cdc-seq").toString
