@@ -302,11 +302,21 @@ object AnnIndex {
     *
     * `batchTag` (streaming ingest) rides the atomic manifest move as
     * a `batch:<tag>` line — the idempotence ledger
-    * [[graft.streaming.StreamingAnnIngest]] consults on replay. */
+    * [[graft.streaming.StreamingAnnIngest]] consults on replay.
+    *
+    * Batch vec_ids must be distinct: a doubled id inside ONE batch is
+    * two conflicting "latest" versions that no latest-wins rule can
+    * order, so the batch fails before anything is written. */
   def upsert(batch: DataFrame, root: String,
       batchTag: Option[String] = None): DataFrame = {
     val s = batch.sparkSession
     org.apache.spark.sql.graft.GraftFunctions.register(s)
+    val dups = batch.groupBy(col("vec_id").cast("long")).count()
+      .filter(col("count") > 1).count()
+    require(dups == 0,
+      s"upsert batch has $dups duplicated vec_id(s) — a batch is one version per " +
+        "vector; reduce upstream to the latest event per id (the CDC ingest does " +
+        "this per micro-batch)")
     PublishLock.withLock(s, root) {
     val (gen, lines) = readManifest(s, root).getOrElse(
       throw new IllegalStateException(s"no ANN index published at $root — build() first"))

@@ -71,6 +71,26 @@ import graft.functions.PortableHash
   * projection scan. A pipeline whose upstream guarantees all-new ids
   * (content-hash keyed ingest, the `d_incremental` discipline) passes
   * `assumeAppendOnly = true` and skips that scan entirely.
+  *
+  * == One reader for both forms ==
+  *
+  * Both forms write generations with the same [[writeGen]] layout, so
+  * every probe reads a GENERATION SET through one reader
+  * ([[probed]]): the memo-cached index is the one-member set
+  * `Seq(textIndex(s, dir))`, an explicit root its manifest's `gen-N`
+  * dirs. The netting rule above is written once ([[netted]]) and
+  * serves the probes, [[compact]] and the negations of
+  * [[upsert]]/[[delete]]. A one-generation set is already net (a build
+  * or a compaction writes one positive row per (doc, term)), so the
+  * reader skips the aggregates there and the cached probes plan as a
+  * bare pruned scan. Fixed-term probes (the fixed-panel head-recall
+  * eval included) prune with driver-side bucket literals plus a pushed
+  * `term IN` filter. Batch probes, whose terms arrive as data,
+  * restrict each generation's scan with a broadcast join on
+  * `(bucket, term)`, which plans a dynamic-pruning subquery on every
+  * generation's scan (the join sits below the generation union, so the
+  * rule sees each scan): one shape serves any set, and no driver
+  * collect precedes the probe.
   */
 object TextIndex {
   type Q = (SparkSession, String) => DataFrame
@@ -148,30 +168,97 @@ object TextIndex {
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/head")
   }
 
+  // ----------------------------------------------------------------
+  // The generation-set reader: every probe reads through it
+  // ----------------------------------------------------------------
+
+  /** `read` over every generation dir of `dirs`, unioned, each row
+    * tagged with its generation's position as `gen`. `dirs` is in
+    * manifest order, which is generation order (older first) — the
+    * order [[netted]]'s `pos` rule keys on. */
+  private def unionOf(dirs: Seq[String])(read: String => DataFrame): DataFrame =
+    dirs.zipWithIndex
+      .map { case (d, i) => read(d).withColumn("gen", lit(i.toLong)) }
+      .reduce(_ unionByName _)
+
+  /** THE signed-delta netting rule (class doc), written once: per
+    * `keys`, sum the additive columns the rows carry (tf, tf_t, dl,
+    * dl_t), take `pos` from the latest POSITIVE row (anti rows carry
+    * NULL and rank −1), and drop net tf ≤ 0 (superseded or deleted).
+    * An aggregate no caller reads (a probe that scores without
+    * positions, a negation that never projects them) is pruned by the
+    * optimizer, and with it the column's scan. */
+  private def netted(rows: DataFrame, keys: String*): DataFrame = {
+    val aggs = Seq("tf", "tf_t", "dl", "dl_t").filter(rows.columns.contains)
+      .map(c => sum(col(c)).as(c)) ++
+      Seq("pos").filter(rows.columns.contains).map(_ =>
+        max_by(col("pos"), when(col("tf") > 0, col("gen")).otherwise(lit(-1L))).as("pos"))
+    rows.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      .filter(col("tf") > 0)
+  }
+
+  /** Restrict a bucket-partitioned scan to fixed `terms`: their
+    * buckets, computed driver-side (no job), land as literal
+    * PartitionFilters and the terms as a pushed row-group filter. The
+    * literal type matches the partition column (INT by partition-value
+    * inference) so the filters prune. */
+  private def onTerms(terms: Seq[String]): DataFrame => DataFrame = {
+    val buckets = terms.map(bucketOf).distinct
+    _.filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
+  }
+
+  /** THE probe reader over a generation set `dirs`: the memo-cached
+    * index is the one-member set `Seq(textIndex(s, dir))`, an explicit
+    * root its manifest's `gen-N` dirs. Every generation's `tier`
+    * (postings or head) and df scans are restricted by `on`; postings
+    * net per (doc, term) and df per term, stats sum. A one-generation
+    * set has nothing to net, so it skips the aggregates and plans as a
+    * bare pruned scan. Returns the netted postings joined with `df`
+    * and the corpus stats `(n_docs, s_dl, s_dlt)`; each probe adds
+    * only its score expression. Pinned schemas: an empty generation
+    * writes no part files, and inference over a file-less dir throws. */
+  private def probed(s: SparkSession, dirs: Seq[String], on: DataFrame => DataFrame,
+      tier: String = "postings"): DataFrame = {
+    val many = dirs.length > 1
+    val schema = if (tier == "head") HeadSchema else PostingsSchema
+    val post = unionOf(dirs)(d => on(s.read.schema(schema).parquet(s"$d/$tier")))
+    val dfs = unionOf(dirs)(d => on(s.read.schema(DfSchema).parquet(s"$d/df")))
+    val stats = unionOf(dirs)(d => s.read.schema(StatsSchema).parquet(s"$d/stats"))
+      .select(col("n_docs"), col("s_dl"), col("s_dlt"))
+    (if (many) netted(post, "doc_id", "term") else post)
+      .join(broadcast(
+        if (many) dfs.groupBy(col("term")).agg(sum(col("df")).as("df"))
+        else dfs.select(col("term"), col("df"))), "term")
+      .crossJoin(broadcast(
+        if (many) stats.agg(sum(col("n_docs")).as("n_docs"), sum(col("s_dl")).as("s_dl"),
+          sum(col("s_dlt")).as("s_dlt"))
+        else stats))
+  }
+
+  /** Score expressions the probes pass to [[probed]]: BM25 as one
+    * exact integer ratio (`exactInt`, the oracle form) or with DOUBLE
+    * factors (the façade form, see [[TextAnalysis.bm25ScDouble]]), and
+    * BM25F over the denormalized title components (body = total −
+    * title). */
+  private def bm25Of(exactInt: Boolean): String =
+    if (exactInt) TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")
+    else TextAnalysis.bm25ScDouble("tf", "df", "dl", "n_docs", "s_dl")
+  private val Bm25fSc = TextAnalysis.bm25fSc("tf_t", "(tf - tf_t)", "dl_t",
+    "(dl - dl_t)", "df", "n_docs", "s_dlt", "(s_dl - s_dlt)")
+
+  /** `(doc_id, token, sc)` for fixed `terms` over a generation set. */
+  private def scoredIn(s: SparkSession, dirs: Seq[String], terms: Seq[String],
+      sc: String, tier: String = "postings"): DataFrame =
+    probed(s, dirs, onTerms(terms), tier)
+      .select(col("doc_id"), col("term").as("token"), expr(sc).as("sc"))
+
   /** Per-(doc, query-term) BM25 partials served FROM THE INDEX —
     * same values as [[TextAnalysis.bm25ScoredOf]] (single exact
     * integer-ratio division), different cost: the postings/df scans
     * prune to the query terms' buckets, the corpus is never touched. */
   private[graft] def bm25ScoredIndexed(s: SparkSession, dir: String,
-      terms: Seq[String], exactInt: Boolean = false): DataFrame = {
-    val root = textIndex(s, dir)
-    val buckets = terms.map(bucketOf).distinct
-    // pinned schemas: an index over an empty corpus has no part files
-    // and inference would throw; and the literal bucket type matches
-    // the partition column (INT by partition-value inference — the
-    // skill-noted partitionBy gotcha) so PartitionFilters prune
-    val post = s.read.schema(PostingsSchema).parquet(s"$root/postings")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-    val dfT = s.read.schema(DfSchema).parquet(s"$root/df")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(col("term"), col("df"))
-    val stats = s.read.schema(StatsSchema).parquet(s"$root/stats")
-    val sc = if (exactInt) TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")
-             else TextAnalysis.bm25ScDouble("tf", "df", "dl", "n_docs", "s_dl")
-    post.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("term").as("token"), expr(sc).as("sc"))
-  }
+      terms: Seq[String], exactInt: Boolean = false): DataFrame =
+    scoredIn(s, Seq(textIndex(s, dir)), terms, bm25Of(exactInt))
 
   /** Façade form: arbitrary-term top-k from the persisted index. */
   def bm25TopkIndexed(s: SparkSession, dir: String, terms: Seq[String],
@@ -192,20 +279,8 @@ object TextIndex {
     * gates. Probe IO ≤ HeadB·|terms| head rows + vocab-sized df at
     * ANY corpus size — the text analogue of the bounded ANN probe. */
   private[graft] def bm25ScoredHead(s: SparkSession, dir: String,
-      terms: Seq[String]): DataFrame = {
-    val root = textIndex(s, dir)
-    val buckets = terms.map(bucketOf).distinct
-    val head = s.read.schema(HeadSchema).parquet(s"$root/head")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-    val dfT = s.read.schema(DfSchema).parquet(s"$root/df")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(col("term"), col("df"))
-    val stats = s.read.schema(StatsSchema).parquet(s"$root/stats")
-    head.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("term").as("token"),
-        expr(TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")).as("sc"))
-  }
+      terms: Seq[String]): DataFrame =
+    scoredIn(s, Seq(textIndex(s, dir)), terms, bm25Of(exactInt = true), "head")
 
   /** Budget-bounded top-k from the head tier. A query whose terms all
     * have df ≤ [[HeadB]] gets the EXACT answer (spec-pinned — the
@@ -261,37 +336,13 @@ object TextIndex {
     * oracle-exact — a champion-budget regression shows up as a recall
     * drop in CI, not in production. */
   private def tBm25HeadRecall: Q = (s, dir) => {
-    val root = textIndex(s, dir)
-    val allTerms = Bm25BatchQueries.flatMap(_._2).distinct
-    val buckets = allTerms.map(bucketOf).distinct
-    val probes = {
-      val rows = Bm25BatchQueries.flatMap { case (id, ts) =>
-        ts.map(t => org.apache.spark.sql.Row(id, t)) }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("query_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("term", org.apache.spark.sql.types.StringType))))
-    }
-    val dfT = s.read.schema(DfSchema).parquet(s"$root/df")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(allTerms: _*))
-      .select(col("term"), col("df"))
-    val stats = s.read.schema(StatsSchema).parquet(s"$root/stats")
-    val sc = TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("nanos").desc, col("doc_id").asc)
-    def topOf(tier: DataFrame): DataFrame = tier
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(allTerms: _*))
-      .join(broadcast(probes), "term")
-      .join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("query_id"), col("doc_id"), expr(sc).as("sc"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(floor(col("sc") * lit(1e9) + lit(0.5)).cast("long")).as("nanos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= HeadRecallK)
-      .select(col("query_id"), col("doc_id"))
-    val exact = topOf(s.read.schema(PostingsSchema).parquet(s"$root/postings"))
-    val head = topOf(s.read.schema(HeadSchema).parquet(s"$root/head"))
+    // the panel's terms are fixed, so both tiers prune by literals
+    val terms = Bm25BatchQueries.flatMap(_._2).distinct
+    def topOf(tier: String): DataFrame =
+      rankedOf(probed(s, Seq(textIndex(s, dir)), onTerms(terms), tier), panelOf(s),
+        HeadRecallK, bm25Of(exactInt = true)).select(col("query_id"), col("doc_id"))
+    val exact = topOf("postings")
+    val head = topOf("head")
     exact.join(head.withColumn("hit", lit(1L)), Seq("query_id", "doc_id"), "left")
       .groupBy(col("query_id"))
       .agg(coalesce(sum(col("hit")), lit(0L)).as("n_hits"))
@@ -354,24 +405,8 @@ object TextIndex {
     * integer algebra, so `t_bm25f_indexed` shares `t_bm25f`'s oracle
     * verbatim). */
   private[graft] def bm25fScoredIndexed(s: SparkSession, dir: String,
-      terms: Seq[String]): DataFrame = {
-    val root = textIndex(s, dir)
-    val buckets = terms.map(bucketOf).distinct
-    val post = s.read.schema(PostingsSchema).parquet(s"$root/postings")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-    val dfT = s.read.schema(DfSchema).parquet(s"$root/df")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(col("term"), col("df"))
-    val stats = s.read.schema(StatsSchema).parquet(s"$root/stats")
-    post.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("tf_b", col("tf") - col("tf_t"))
-      .withColumn("dl_b", col("dl") - col("dl_t"))
-      .withColumn("s_b", col("s_dl") - col("s_dlt"))
-      .select(col("doc_id"), col("term").as("token"),
-        expr(TextAnalysis.bm25fSc("tf_t", "tf_b", "dl_t", "dl_b",
-          "df", "n_docs", "s_dlt", "s_b")).as("sc"))
-  }
+      terms: Seq[String]): DataFrame =
+    scoredIn(s, Seq(textIndex(s, dir)), terms, Bm25fSc)
 
   /** Façade form: arbitrary-term fielded top-k from the persisted
     * index. */
@@ -394,22 +429,25 @@ object TextIndex {
     if (rest.isEmpty) "p0 IS NOT NULL" else s"exists(p0, x -> ${rest.mkString(" AND ")})"
   }
 
-  /** Two-stage phrase top-k over a scored-with-positions frame
-    * `(doc_id, term, sc, pos)` restricted to the phrase's terms:
-    * candidates must match EVERY distinct term (the index
-    * intersection), only candidates pay the position-adjacency
-    * confirm, scoring keeps the filter-query convention (global idf;
-    * nano-integer order-free partials) — the exact
-    * [[TextAnalysis.phraseBm25Of]] contract, corpus never touched. */
-  private def phraseTopkOf(scored: DataFrame, phrase: Seq[String],
+  /** Two-stage phrase top-k over a generation set: the phrase terms'
+    * postings with their live positions, candidates must match EVERY
+    * distinct term (the index intersection), only candidates pay the
+    * position-adjacency confirm, scoring keeps the filter-query
+    * convention (global idf; exact-integer BM25; nano-integer
+    * order-free partials) — the exact [[TextAnalysis.phraseBm25Of]]
+    * contract, corpus never touched. */
+  private def phraseIn(s: SparkSession, dirs: Seq[String], phrase: Seq[String],
       k: Int): DataFrame = {
+    require(phrase.nonEmpty && phrase.forall(_.nonEmpty),
+      "phrase must be non-empty tokens")
+    val sc = bm25Of(exactInt = true)
     val aggs = Seq(
       countDistinct(col("term")).as("nt"),
-      sum(floor(col("sc") * lit(1e9) + lit(0.5)).cast("long")).as("nanos")) ++
+      sum(floor(expr(sc) * lit(1e9) + lit(0.5)).cast("long")).as("nanos")) ++
       phrase.indices.map(i =>
         first(when(col("term") === phrase(i), col("pos")), ignoreNulls = true)
           .as(s"p$i"))
-    scored.groupBy(col("doc_id"))
+    probed(s, dirs, onTerms(phrase.distinct)).groupBy(col("doc_id"))
       .agg(aggs.head, aggs.tail: _*)
       .filter(col("nt") === phrase.distinct.length)
       .filter(expr(phraseAdjacencyExpr(phrase)))
@@ -417,26 +455,6 @@ object TextIndex {
       .limit(k)
       .select(col("doc_id"),
         expr(TextAnalysis.r6("cast(nanos as double) / 1e9")).as("bm25"))
-  }
-
-  /** `(doc_id, term, sc, pos)` from the cached single-generation
-    * index — [[bm25ScoredIndexed]] with the positional column carried
-    * (exact-integer scoring, the phrase contract). */
-  private def indexedScoredWithPos(s: SparkSession, dir: String,
-      terms: Seq[String]): DataFrame = {
-    val root = textIndex(s, dir)
-    val buckets = terms.map(bucketOf).distinct
-    val post = s.read.schema(PostingsSchema).parquet(s"$root/postings")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-    val dfT = s.read.schema(DfSchema).parquet(s"$root/df")
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(col("term"), col("df"))
-    val stats = s.read.schema(StatsSchema).parquet(s"$root/stats")
-    post.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("term"),
-        expr(TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")).as("sc"),
-        col("pos"))
   }
 
   /** Phrase-constrained BM25 top-k SERVED FROM THE INDEX — the
@@ -448,50 +466,18 @@ object TextIndex {
     * between a positional-postings read and a corpus scan). Shares
     * `t_bm25_phrase`'s oracle verbatim. */
   def phraseBm25Indexed(s: SparkSession, dir: String, phrase: Seq[String],
-      k: Int): DataFrame = {
-    require(phrase.nonEmpty && phrase.forall(_.nonEmpty),
-      "phrase must be non-empty tokens")
-    phraseTopkOf(indexedScoredWithPos(s, dir, phrase), phrase, k)
-  }
+      k: Int): DataFrame =
+    phraseIn(s, Seq(textIndex(s, dir)), phrase, k)
 
   /** Phrase retrieval from an explicit-root incremental index — the
     * LSM form: tf/dl/df/stats net across signed-delta generations as
     * always; POSITIONS are not additive, so the live positions are
-    * the latest POSITIVE row's (a doc version lives whole in one
-    * generation; anti rows carry NULL), selected by `max_by` over the
-    * generation number. Inherits upserts, supersedes (with CHANGED
-    * positions — spec-pinned), deletes, compaction, and `asOf`
-    * snapshot pins. */
+    * the latest POSITIVE row's ([[netted]]). Inherits upserts,
+    * supersedes (with CHANGED positions — spec-pinned), deletes,
+    * compaction, and `asOf` snapshot pins. */
   def phraseBm25AtRoot(s: SparkSession, root: String, phrase: Seq[String],
-      k: Int, asOf: Option[Long] = None): DataFrame = {
-    require(phrase.nonEmpty && phrase.forall(_.nonEmpty),
-      "phrase must be non-empty tokens")
-    org.apache.spark.sql.graft.GraftFunctions.register(s)
-    val gens = gensOf(s, root, asOf)
-    val buckets = phrase.map(bucketOf).distinct
-    def pruned(sub: String, schema: org.apache.spark.sql.types.StructType) =
-      gens.map(g =>
-        s.read.schema(schema).parquet(s"$root/$g/$sub")
-          .filter(col("bucket").isin(buckets: _*) && col("term").isin(phrase.distinct: _*))
-          .withColumn("gen", lit(g.stripPrefix("gen-").toLong)))
-      .reduce(_ unionByName _)
-    val post = pruned("postings", PostingsSchema)
-      .groupBy(col("doc_id"), col("term"))
-      .agg(sum(col("tf")).as("tf"), sum(col("dl")).as("dl"),
-        max_by(col("pos"), when(col("tf") > 0, col("gen")).otherwise(lit(-1L)))
-          .as("pos"))
-      .filter(col("tf") > 0)
-    val dfT = pruned("df", DfSchema).groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val stats = gens.map(g => s.read.schema(StatsSchema).parquet(s"$root/$g/stats"))
-      .reduce(_ unionByName _)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_dl")).as("s_dl"))
-    val scored = post.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("term"),
-        expr(TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")).as("sc"),
-        col("pos"))
-    phraseTopkOf(scored, phrase, k)
-  }
+      k: Int, asOf: Option[Long] = None): DataFrame =
+    phraseIn(s, genDirs(s, root, asOf), phrase, k)
 
   // ----------------------------------------------------------------
   // Batch probes: many queries through the index in ONE join
@@ -514,36 +500,48 @@ object TextIndex {
     * each query's slice equals its single-query probe exactly
     * (spec-pinned). */
   def bm25TopkBatchIndexed(s: SparkSession, dir: String, queries: DataFrame,
-      k: Int, exactInt: Boolean = false): DataFrame = {
+      k: Int, exactInt: Boolean = false): DataFrame =
+    batchTopOf(s, Seq(textIndex(s, dir)), queries, k, bm25Of(exactInt))
+
+  /** The batch probe over a generation set ([[bm25TopkBatchIndexed]],
+    * [[bm25TopkBatchAtRoot]]): the probe frame `(query_id, term,
+    * bucket)` restricts every generation's scans through one broadcast
+    * `(bucket, term)` join — a dynamic-pruning subquery per generation
+    * scan (see class doc) — and [[rankedOf]] ranks per query. */
+  private def batchTopOf(s: SparkSession, dirs: Seq[String], queries: DataFrame,
+      k: Int, sc: String): DataFrame = {
     org.apache.spark.sql.graft.GraftFunctions.register(s)
-    val root = textIndex(s, dir)
     // the empty-term guard doubles as the SELECTIVE predicate Spark's
     // PartitionPruning rule requires on the filtering side before it
     // will insert a DPP subquery on the scan (a bare broadcast join
     // with no filter prunes nothing dynamically) — the s_ann_lsh_batch
-    // probe-side filter plays the same role there
-    val probes = queries
-      .select(col("query_id").cast("long").as("query_id"), col("term"))
+    // probe-side filter plays the same role there. The frame is
+    // re-rooted on its RDD so the guard survives the optimizer: over a
+    // literal (LocalRelation) frame it would be folded away at plan
+    // time, and with it every scan's pruning.
+    val q = queries.select(col("query_id").cast("long").as("query_id"), col("term"))
+    val probes = s.createDataFrame(q.rdd, q.schema)
       .filter(col("term") =!= "")
       .distinct()
       .withColumn("bucket",
         pmod(PortableHash.polyHash(col("term")), lit(Buckets.toLong)).cast("int"))
-    val dfT = s.read.schema(DfSchema).parquet(s"$root/df")
-      .join(broadcast(probes.select(col("bucket"), col("term")).distinct()),
-        Seq("bucket", "term"))
-      .select(col("term"), col("df"))
-    val stats = s.read.schema(StatsSchema).parquet(s"$root/stats")
-    val sc = if (exactInt) TextAnalysis.bm25Sc("tf", "df", "dl", "n_docs", "s_dl")
-             else TextAnalysis.bm25ScDouble("tf", "df", "dl", "n_docs", "s_dl")
+    val pairs = broadcast(probes.select(col("bucket"), col("term")).distinct())
+    rankedOf(probed(s, dirs, _.join(pairs, Seq("bucket", "term"))),
+      probes.select(col("query_id"), col("term")), k, sc)
+  }
+
+  /** The rank tail of every batch probe: the netted postings of
+    * [[probed]] fan out to each `(query_id, term)` probe, partials sum
+    * as nano integers per (query, doc) (order-free, engine-portable),
+    * and a query-partitioned `row_number` keeps each query's top `k`.
+    * Returns `(query_id, rank, doc_id, bm25)`. */
+  private def rankedOf(postings: DataFrame, probes: DataFrame, k: Int,
+      sc: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("nanos").desc, col("doc_id").asc)
-    s.read.schema(PostingsSchema).parquet(s"$root/postings")
-      .join(broadcast(probes), Seq("bucket", "term"))
-      .join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("query_id"), col("doc_id"), expr(sc).as("sc"))
+    postings.join(broadcast(probes), "term")
       .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(floor(col("sc") * lit(1e9) + lit(0.5)).cast("long")).as("nanos"))
+      .agg(sum(floor(expr(sc) * lit(1e9) + lit(0.5)).cast("long")).as("nanos"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank").cast("long").as("rank"), col("doc_id"),
@@ -561,20 +559,14 @@ object TextIndex {
     4L -> Seq("scan", "filter", "column", "batch"))
   private val BatchK = 5
 
-  private def tBm25Batch: Q = (s, dir) => {
-    // RDD-backed, not a LocalRelation: a Seq-literal frame would let
-    // the optimizer eagerly fold the probe-side filter away, and with
-    // it the selective predicate the DPP rule keys on — an RDD source
-    // models the real serving shape (the query workload arrives as
-    // data, not literals)
-    val rows = Bm25BatchQueries.flatMap { case (id, ts) =>
-      ts.map(t => org.apache.spark.sql.Row(id, t)) }
-    val q = s.createDataFrame(s.sparkContext.parallelize(rows, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("query_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("term", org.apache.spark.sql.types.StringType))))
-    bm25TopkBatchIndexed(s, dir, q, BatchK, exactInt = true)
+  /** [[Bm25BatchQueries]] as a `(query_id, term)` frame. */
+  private def panelOf(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Bm25BatchQueries.flatMap { case (id, ts) => ts.map(id -> _) }.toDF("query_id", "term")
   }
+
+  private def tBm25Batch: Q = (s, dir) =>
+    bm25TopkBatchIndexed(s, dir, panelOf(s), BatchK, exactInt = true)
 
   private val tBm25BatchSql = {
     val toks = TextAnalysis.duckTokens("text")
@@ -790,14 +782,20 @@ object TextIndex {
   private def genVersion(lines: Seq[String]): Long =
     lines.filter(_.startsWith("gen-")).map(_.stripPrefix("gen-").toLong).max
 
+  /** The generation dirs `lines` reference under `root`, in
+    * generation order. */
+  private def dirsIn(lines: Seq[String], root: String): Seq[String] = {
+    val gens = lines.filter(_.startsWith("gen-")).sortBy(_.stripPrefix("gen-").toLong)
+    require(gens.nonEmpty, s"no text index at $root — build() first")
+    gens.map(g => s"$root/$g")
+  }
+
   /** Generation dirs of the live manifest (`asOf = None`) or of
     * retained snapshot `v`, format-checked. */
-  private def gensOf(s: SparkSession, root: String, asOf: Option[Long]): Seq[String] = {
+  private def genDirs(s: SparkSession, root: String, asOf: Option[Long]): Seq[String] = {
     val lines = asOf.fold(Versions.live(s, root))(Versions.asOf(s, root, _))
     requireFormat(lines, root)
-    val gens = lines.filter(_.startsWith("gen-"))
-    require(gens.nonEmpty, s"no text index at $root — build() first")
-    gens
+    dirsIn(lines, root)
   }
 
   /** The retained snapshot versions at `root`, ascending. Snapshots
@@ -849,35 +847,41 @@ object TextIndex {
     }
   }
 
-  /** The live doc registry over `gens`: `(doc_id, dl)` of every doc
+  /** The signed doc registry rows of every generation in `dirs`. */
+  private def docsOf(s: SparkSession, dirs: Seq[String]): DataFrame =
+    unionOf(dirs)(d => s.read.schema(DocsSchema).parquet(s"$d/docs"))
+
+  /** Every posting row of every generation in `dirs` (maintenance
+    * reads: compaction, negation, bloat accounting). */
+  private def postingsOf(s: SparkSession, dirs: Seq[String]): DataFrame =
+    unionOf(dirs)(d => s.read.schema(PostingsSchema).parquet(s"$d/postings"))
+
+  /** The live doc registry over `dirs`: `(doc_id, dl)` of every doc
     * whose signed events sum to present. Maintenance-only read (see
     * class doc) — probes never touch it. */
-  private def liveDocs(s: SparkSession, root: String, gens: Seq[String]): DataFrame =
-    gens.map(g => s.read.schema(DocsSchema).parquet(s"$root/$g/docs"))
-      .reduce(_ unionByName _)
+  private def liveDocs(s: SparkSession, dirs: Seq[String]): DataFrame =
+    docsOf(s, dirs)
       .groupBy(col("doc_id"))
       .agg(sum(col("d")).as("alive"), sum(col("d") * col("dl")).as("dl"),
         sum(col("d") * col("dl_t")).as("dl_t"))
       .filter(col("alive") === 1)
       .select(col("doc_id"), col("dl"), col("dl_t"))
 
-  /** The currently-live net postings of the given doc_ids: all
-    * generations' postings semi-joined to the ids (column-pruned,
-    * broadcast — the ids frame is a maintenance batch, model-sized),
-    * netted per (doc, term). These are the exact rows a re-send or
-    * delete must negate. */
-  private def livePostingsOf(s: SparkSession, root: String, gens: Seq[String],
+  /** The exact negations of the given doc_ids' currently-live net
+    * postings — the rows a re-send or delete writes: all generations'
+    * postings semi-joined to the ids (column-pruned, broadcast — the
+    * ids frame is a maintenance batch, model-sized), netted per
+    * (doc, term), signs flipped, positions NULL. */
+  private def negationsOf(s: SparkSession, dirs: Seq[String],
       ids: DataFrame): DataFrame =
-    gens.map(g => s.read.schema(PostingsSchema).parquet(s"$root/$g/postings"))
-      .reduce(_ unionByName _)
-      .join(broadcast(ids.select(col("doc_id"))), "doc_id")
-      .groupBy(col("doc_id"), col("term"), col("bucket"))
-      .agg(sum(col("tf")).as("tf"), sum(col("tf_t")).as("tf_t"),
-        sum(col("dl")).as("dl"), sum(col("dl_t")).as("dl_t"))
-      .filter(col("tf") > 0)
+    netted(postingsOf(s, dirs).join(broadcast(ids.select(col("doc_id"))), "doc_id"),
+        "doc_id", "term", "bucket")
+      .select(col("doc_id"), col("term"), (-col("tf")).as("tf"),
+        (-col("tf_t")).as("tf_t"), (-col("dl")).as("dl"), (-col("dl_t")).as("dl_t"),
+        lit(null).cast("array<int>").as("pos"), col("bucket"))
 
-  private def nextGenOf(gens: Seq[String]): String =
-    s"gen-${genVersion(gens) + 1}"
+  private def nextGenOf(lines: Seq[String]): String =
+    s"gen-${genVersion(lines) + 1}"
 
   /** Upsert a batch — new doc_ids append, RE-SENT doc_ids supersede
     * their old version exactly (the old postings are negated in the
@@ -906,14 +910,13 @@ object TextIndex {
     import s.implicits._
     PublishLock.withLock(s, root) {
     val lines = Versions.live(s, root)
-    val gens = lines.filter(_.startsWith("gen-"))
-    require(gens.nonEmpty, s"no text index at $root — build() first")
-    val next = nextGenOf(gens)
+    val dirs = dirsIn(lines, root)
+    val next = nextGenOf(lines)
     val docs = normalized(batch)
     val dl = dlOf(docs).persist()
     val resent =
       (if (assumeAppendOnly) dl.limit(0).select(col("doc_id"), col("dl"), col("dl_t"))
-       else liveDocs(s, root, gens)
+       else liveDocs(s, dirs)
          .join(broadcast(dl.select(col("doc_id"))), "doc_id"))
         .persist()
     try {
@@ -932,11 +935,7 @@ object TextIndex {
       val anti =
         if (nResent == 0) s.createDataFrame(
           s.sparkContext.emptyRDD[org.apache.spark.sql.Row], PostingsSchema)
-        else livePostingsOf(s, root, gens, resent)
-          .select(col("doc_id"), col("term"), (-col("tf")).as("tf"),
-            (-col("tf_t")).as("tf_t"), (-col("dl")).as("dl"),
-            (-col("dl_t")).as("dl_t"),
-            lit(null).cast("array<int>").as("pos"), col("bucket"))
+        else negationsOf(s, dirs, resent)
       val batchStats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("s_dl"),
         sum(col("dl_t")).as("s_dlt"))
       val resentStats = resent.agg(count(lit(1)).as("rn"),
@@ -978,10 +977,9 @@ object TextIndex {
     import s.implicits._
     PublishLock.withLock(s, root) {
     val lines = Versions.live(s, root)
-    val gens = lines.filter(_.startsWith("gen-"))
-    require(gens.nonEmpty, s"no text index at $root — build() first")
-    val next = nextGenOf(gens)
-    val victims = liveDocs(s, root, gens)
+    val dirs = dirsIn(lines, root)
+    val next = nextGenOf(lines)
+    val victims = liveDocs(s, dirs)
       .join(broadcast(ids.select(col("doc_id").cast("long").as("doc_id")).distinct()),
         "doc_id")
       .persist()
@@ -989,13 +987,8 @@ object TextIndex {
       val n = victims.count()
       if (n == 0) Seq((-1L, 0L)).toDF("generation", "n_deleted")
       else {
-        val anti = livePostingsOf(s, root, gens, victims)
-          .select(col("doc_id"), col("term"), (-col("tf")).as("tf"),
-            (-col("tf_t")).as("tf_t"), (-col("dl")).as("dl"),
-            (-col("dl_t")).as("dl_t"),
-            lit(null).cast("array<int>").as("pos"), col("bucket"))
         writeParts(
-          anti,
+          negationsOf(s, dirs, victims),
           victims.agg((-count(lit(1))).as("n_docs"),
             (-coalesce(sum(col("dl")), lit(0L))).as("s_dl"),
             (-coalesce(sum(col("dl_t")), lit(0L))).as("s_dlt")),
@@ -1023,50 +1016,24 @@ object TextIndex {
     import s.implicits._
     PublishLock.withLock(s, root) {
     val lines = Versions.live(s, root)
-    val gens = lines.filter(_.startsWith("gen-"))
-    require(gens.nonEmpty, s"no text index at $root — build() first")
-    val next = nextGenOf(gens)
-    val live = liveDocs(s, root, gens).persist()
+    val dirs = dirsIn(lines, root)
+    val next = nextGenOf(lines)
+    val live = liveDocs(s, dirs).persist()
     try {
       val n = live.count()
-      // positions are NOT additive: the live positions are the latest
-      // POSITIVE row's (anti rows rank -1), selected by max_by over the
-      // generation number attached per scan
-      val postings = gens
-        .map(g => s.read.schema(PostingsSchema).parquet(s"$root/$g/postings")
-          .withColumn("gen", lit(g.stripPrefix("gen-").toLong)))
-        .reduce(_ unionByName _)
-        .groupBy(col("doc_id"), col("term"), col("bucket"))
-        .agg(sum(col("tf")).as("tf"), sum(col("tf_t")).as("tf_t"),
-          sum(col("dl")).as("dl"), sum(col("dl_t")).as("dl_t"),
-          max_by(col("pos"), when(col("tf") > 0, col("gen")).otherwise(lit(-1L)))
-            .as("pos"))
-        .filter(col("tf") > 0)
-        .select(col("doc_id"), col("term"), col("tf"), col("tf_t"),
-          col("dl"), col("dl_t"), col("pos"), col("bucket"))
       writeParts(
-        postings,
+        netted(postingsOf(s, dirs), "doc_id", "term", "bucket"),
         live.agg(count(lit(1)).as("n_docs"),
           coalesce(sum(col("dl")), lit(0L)).as("s_dl"),
           coalesce(sum(col("dl_t")), lit(0L)).as("s_dlt")),
         live.select(col("doc_id"), col("dl"), col("dl_t"), lit(1).as("d")),
         s"$root/$next")
       publish(s, root, next +: lines.filter(_.startsWith("batch:")))
-      Seq((n, gens.length.toLong)).toDF("n_live", "gens_folded")
+      Seq((n, dirs.length.toLong)).toDF("n_live", "gens_folded")
     } finally live.unpersist()
     }
   }
 
-  /** Per-bucket postings-bloat accounting — the text twin of
-    * [[AnnIndex.driftStats]], the "when to compact" signal: `n_rows`
-    * physical posting rows across generations, `n_live` net-positive
-    * (doc, term) postings a probe would keep after netting, `n_dead`
-    * their difference — the cancelled/superseded mass every probe of
-    * the bucket reads and then nets away. Append-only histories read
-    * n_dead = 0; re-sends and deletes grow it (a re-send leaves old
-    * row + negation + new row = 3 rows, 1 live); [[compact]] returns
-    * it to 0 (spec-pinned). Full postings scan (narrow projection) —
-    * a maintenance query, not a serving path. */
   /** What changed between two retained snapshots — the audit a
     * training run asks before repinning ("what did the index absorb
     * since the version my dataset was built against?"): one row per
@@ -1079,9 +1046,7 @@ object TextIndex {
     * lists exactly what a rollback to `v` would discard. */
   def snapshotDiff(s: SparkSession, root: String, v1: Long, v2: Long): DataFrame = {
     def state(v: Long): DataFrame =
-      gensOf(s, root, Some(v))
-        .map(g => s.read.schema(DocsSchema).parquet(s"$root/$g/docs"))
-        .reduce(_ unionByName _)
+      docsOf(s, genDirs(s, root, Some(v)))
         .groupBy(col("doc_id"))
         .agg(sum(col("d")).as("alive"),
           sum(when(col("d") > 0, 1L).otherwise(0L)).as("n_versions"))
@@ -1101,15 +1066,21 @@ object TextIndex {
   /** Number of live documents in the published index — the signed
     * registry netted (one registry scan; maintenance/audit read, the
     * [[pipelines.Forget]] erasure certificate's text-surface count). */
-  def liveDocCount(s: SparkSession, root: String): Long = {
-    liveDocs(s, root, gensOf(s, root, None)).count()
-  }
+  def liveDocCount(s: SparkSession, root: String): Long =
+    liveDocs(s, genDirs(s, root, None)).count()
 
-  def indexStats(s: SparkSession, root: String): DataFrame = {
-    val post = gensOf(s, root, None)
-      .map(g => s.read.schema(PostingsSchema).parquet(s"$root/$g/postings"))
-      .reduce(_ unionByName _)
-    post.groupBy(col("bucket"), col("doc_id"), col("term"))
+  /** Per-bucket postings-bloat accounting — the text twin of
+    * [[AnnIndex.driftStats]], the "when to compact" signal: `n_rows`
+    * physical posting rows across generations, `n_live` net-positive
+    * (doc, term) postings a probe would keep after netting, `n_dead`
+    * their difference — the cancelled/superseded mass every probe of
+    * the bucket reads and then nets away. Append-only histories read
+    * n_dead = 0; re-sends and deletes grow it (a re-send leaves old
+    * row + negation + new row = 3 rows, 1 live); [[compact]] returns
+    * it to 0 (spec-pinned). Full postings scan (narrow projection) —
+    * a maintenance query, not a serving path. */
+  def indexStats(s: SparkSession, root: String): DataFrame =
+    postingsOf(s, genDirs(s, root, None)).groupBy(col("bucket"), col("doc_id"), col("term"))
       .agg(count(lit(1)).as("rows"), sum(col("tf")).as("net_tf"))
       .groupBy(col("bucket"))
       .agg(sum(col("rows")).as("n_rows"),
@@ -1117,7 +1088,6 @@ object TextIndex {
       .select(col("bucket"), col("n_rows"), col("n_live"),
         (col("n_rows") - col("n_live")).as("n_dead"))
       .orderBy(col("bucket"))
-  }
 
   /** [[indexStats]] made ACTIONABLE (the [[AnnIndex.compactIfDrifted]]
     * policy for text): compact iff the dead fraction of physical
@@ -1158,36 +1128,6 @@ object TextIndex {
   def pins(s: SparkSession, root: String): Map[String, Long] =
     Versions.pins(s, root)
 
-  /** BM25 partials over every published generation: postings union
-    * bucket-pruned per gen and NETTED per (doc, term) (signed deltas —
-    * net tf ≤ 0 rows are superseded/deleted and drop), per-gen df
-    * deltas SUMMED per term, stats summed — all exact integer merges,
-    * so scores equal a from-scratch index of the surviving corpus bit
-    * for bit. */
-  private def scoredAtRoot(s: SparkSession, root: String,
-      terms: Seq[String], asOf: Option[Long] = None): DataFrame = {
-    val gens = gensOf(s, root, asOf)
-    val buckets = terms.map(bucketOf).distinct
-    def pruned(sub: String, schema: org.apache.spark.sql.types.StructType) =
-      gens.map(g =>
-        s.read.schema(schema).parquet(s"$root/$g/$sub")
-          .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*)))
-      .reduce(_ unionByName _)
-    val post = pruned("postings", PostingsSchema)
-      .groupBy(col("doc_id"), col("term"))
-      .agg(sum(col("tf")).as("tf"), sum(col("dl")).as("dl"))
-      .filter(col("tf") > 0)
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-    val dfT = pruned("df", DfSchema).groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val stats = gens.map(g => s.read.schema(StatsSchema).parquet(s"$root/$g/stats"))
-      .reduce(_ unionByName _)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_dl")).as("s_dl"))
-    post.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("term").as("token"),
-        expr(TextAnalysis.bm25ScDouble("tf", "df", "dl", "n_docs", "s_dl")).as("sc"))
-  }
-
   /** Arbitrary-term top-k from an explicit-root incremental index.
     * `asOf = Some(v)` probes the RETAINED SNAPSHOT v instead of the
     * live manifest — the exact index state whose publish carried
@@ -1197,7 +1137,8 @@ object TextIndex {
     * a replayable answer. */
   def bm25TopkAtRoot(s: SparkSession, root: String, terms: Seq[String],
       k: Int, asOf: Option[Long] = None): DataFrame =
-    TextAnalysis.bm25TopkCut(scoredAtRoot(s, root, terms, asOf), k)
+    TextAnalysis.bm25TopkCut(
+      scoredIn(s, genDirs(s, root, asOf), terms, bm25Of(exactInt = false)), k)
 
   /** Fielded (BM25F) top-k from an explicit-root incremental index —
     * the [[bm25TopkAtRoot]] twin: the title components net across
@@ -1206,43 +1147,16 @@ object TextIndex {
     * inherits the whole LSM lifecycle — upserts, deletes, compaction,
     * `asOf` snapshot pins — with zero extra structures. */
   def bm25fTopkAtRoot(s: SparkSession, root: String, terms: Seq[String],
-      k: Int, asOf: Option[Long] = None): DataFrame = {
-    val gens = gensOf(s, root, asOf)
-    val buckets = terms.map(bucketOf).distinct
-    def pruned(sub: String, schema: org.apache.spark.sql.types.StructType) =
-      gens.map(g =>
-        s.read.schema(schema).parquet(s"$root/$g/$sub")
-          .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*)))
-      .reduce(_ unionByName _)
-    val post = pruned("postings", PostingsSchema)
-      .groupBy(col("doc_id"), col("term"))
-      .agg(sum(col("tf")).as("tf"), sum(col("tf_t")).as("tf_t"),
-        sum(col("dl")).as("dl"), sum(col("dl_t")).as("dl_t"))
-      .filter(col("tf") > 0)
-    val dfT = pruned("df", DfSchema).groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val stats = gens.map(g => s.read.schema(StatsSchema).parquet(s"$root/$g/stats"))
-      .reduce(_ unionByName _)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_dl")).as("s_dl"),
-        sum(col("s_dlt")).as("s_dlt"))
-    val scored = post.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("tf_b", col("tf") - col("tf_t"))
-      .withColumn("dl_b", col("dl") - col("dl_t"))
-      .withColumn("s_b", col("s_dl") - col("s_dlt"))
-      .select(col("doc_id"), col("term").as("token"),
-        expr(TextAnalysis.bm25fSc("tf_t", "tf_b", "dl_t", "dl_b",
-          "df", "n_docs", "s_dlt", "s_b")).as("sc"))
-    TextAnalysis.bm25TopkCut(scored, k)
-  }
+      k: Int, asOf: Option[Long] = None): DataFrame =
+    TextAnalysis.bm25TopkCut(scoredIn(s, genDirs(s, root, asOf), terms, Bm25fSc), k)
 
   /** BATCH retrieval from an explicit-root incremental index — the
     * [[bm25TopkBatchIndexed]] serving shape over SIGNED delta
     * generations: one `(query_id, term)` frame, term buckets computed
     * as a column by the native portable hash, every generation's
     * postings/df restricted to the probe frame's (bucket, term) pairs
-    * (the batch's bucket UNION — bounded by its term vocabulary —
-    * collected once into PartitionFilters literals, plus the
-    * broadcast pair join), then NETTED per (doc, term) / per term
+    * by the broadcast pair join (a dynamic-pruning subquery on each
+    * generation's scan, PlanSpec-pinned), then NETTED per (doc, term) / per term
     * (exact integer sums — superseded and deleted mass cancels)
     * BEFORE fanning out per query, so the maintenance history costs
     * each query nothing beyond its own terms' postings. Nano-integer
@@ -1253,51 +1167,8 @@ object TextIndex {
     * state the single probe would. Returns
     * `(query_id, rank, doc_id, bm25)`. */
   def bm25TopkBatchAtRoot(s: SparkSession, root: String, queries: DataFrame,
-      k: Int, asOf: Option[Long] = None): DataFrame = {
-    org.apache.spark.sql.graft.GraftFunctions.register(s)
-    val gens = gensOf(s, root, asOf)
-    val probes = queries
-      .select(col("query_id").cast("long").as("query_id"), col("term"))
-      .filter(col("term") =!= "")
-      .distinct()
-      .withColumn("bucket",
-        pmod(PortableHash.polyHash(col("term")), lit(Buckets.toLong)).cast("int"))
-    val terms = broadcast(probes.select(col("bucket"), col("term")).distinct())
-    // the batch's BUCKET UNION (bounded by its term vocabulary, never
-    // by the corpus) as PartitionFilters literals on every generation
-    // scan — the join alone would read ALL bucket partitions and
-    // filter rows after
-    val buckets = probes.select(col("bucket")).distinct()
-      .collect().map(r => Int.box(r.getInt(0))).toSeq
-    val post = gens.map(g => s.read.schema(PostingsSchema).parquet(s"$root/$g/postings")
-        .filter(col("bucket").isin(buckets: _*)))
-      .reduce(_ unionByName _)
-      .join(terms, Seq("bucket", "term"))
-      .groupBy(col("doc_id"), col("term"), col("bucket"))
-      .agg(sum(col("tf")).as("tf"), sum(col("dl")).as("dl"))
-      .filter(col("tf") > 0)
-    val dfT = gens.map(g => s.read.schema(DfSchema).parquet(s"$root/$g/df")
-        .filter(col("bucket").isin(buckets: _*)))
-      .reduce(_ unionByName _)
-      .join(terms, Seq("bucket", "term"))
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val stats = gens.map(g => s.read.schema(StatsSchema).parquet(s"$root/$g/stats"))
-      .reduce(_ unionByName _)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_dl")).as("s_dl"))
-    val sc = TextAnalysis.bm25ScDouble("tf", "df", "dl", "n_docs", "s_dl")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("nanos").desc, col("doc_id").asc)
-    post.join(broadcast(probes), Seq("bucket", "term"))
-      .join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("query_id"), col("doc_id"), expr(sc).as("sc"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(floor(col("sc") * lit(1e9) + lit(0.5)).cast("long")).as("nanos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("doc_id"),
-        expr(TextAnalysis.r6("cast(nanos as double) / 1e9")).as("bm25"))
-  }
+      k: Int, asOf: Option[Long] = None): DataFrame =
+    batchTopOf(s, genDirs(s, root, asOf), queries, k, bm25Of(exactInt = false))
 
   /** The oracle query: identical output contract to `t_bm25` (same
     * fixed terms, same pivot, same rounding), served from the index —

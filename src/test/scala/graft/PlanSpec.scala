@@ -208,6 +208,43 @@ class PlanSpec extends SparkSpec {
     assert(!p.toLowerCase.contains("documents.parquet"), p)
   }
 
+  test("text LSM batch probe: every generation's postings scan is pruned DYNAMICALLY") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val root = java.nio.file.Files.createTempDirectory("graft_plan_batch").toString
+    val frame = Seq(1L -> "vector", 1L -> "hash", 2L -> "stream").toDF("query_id", "term")
+    // the postings scans of the probe plan, one per generation
+    def postingsScans(): Seq[FileSourceScanExec] = {
+      val p = Graft.text.bm25TopkBatchAt(spark, root, frame, 5).queryExecution.executedPlan
+      new AdaptiveSparkPlanHelper {}.collect(p) { case f: FileSourceScanExec => f }
+        .filter(_.relation.location.rootPaths.exists(_.getName == "postings"))
+    }
+    def dynamic(f: FileSourceScanExec) =
+      f.partitionFilters.exists(_.isInstanceOf[DynamicPruningExpression])
+    operators.TextIndex.build(Seq((1L, "vector hash alpha"), (2L, "stream beta"))
+      .toDF("doc_id", "text"), root)
+    val one = postingsScans()
+    assert(one.length == 1 && one.forall(dynamic), one.mkString("\n"))
+    operators.TextIndex.upsert(Seq((2L, "stream gamma"), (3L, "vector delta"))
+      .toDF("doc_id", "text"), root)
+    val two = postingsScans()
+    assert(two.length == 2 && two.forall(dynamic), two.mkString("\n"))
+    // the join prunes at run time, so no driver collect precedes the probe
+    assert(jobsDuring(Graft.text.bm25TopkBatchAt(spark, root, frame, 5)) == 0)
+  }
+
+  test("Inspect.run writes a query's plan, builder collects and two-pass profile") {
+    val out = java.nio.file.Files.createTempDirectory("graft_inspect")
+    Inspect.run(spark, Seq("s_pq_adc"), sf, Some(out.toString))
+    def read(f: String) = java.nio.file.Files.readString(out.resolve(s"s_pq_adc.$f.txt"))
+    assert(read("plan").contains("== Physical Plan =="), read("plan"))
+    assert(read("collects").contains("== builder collect #1 "), read("collects"))
+    val prof = read("profile")
+    assert(Seq("[job]", "[pass 1]", "[pass 2]").forall(prof.contains), prof)
+  }
+
   test("profile: BOTH variants plan without a multi-distinct Expand") {
     val o = Tables.orders(spark, sf)
     val approx = operators.Quality.profile(o, exact = false)

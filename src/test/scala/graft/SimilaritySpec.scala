@@ -355,6 +355,28 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("ANN upsert: a batch that doubles a vec_id fails before any write") {
+    val v = Tables.embeddings(spark, sf)
+    val root = java.nio.file.Files.createTempDirectory("graft-ann-dup").toString
+    graft.operators.AnnIndex.build(v.filter(col("vec_id") <= 300), root)
+    val v0 = graft.operators.AnnIndex.currentVersion(spark, root)
+    def manifest(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(root, "_GRAFT_IVF_MANIFEST")).asScala.toSeq
+    }
+    val before = manifest()
+    // two different vectors under one id: two conflicting "latest"
+    // versions in one batch
+    val doubled = v.filter(col("vec_id") === 301L)
+      .unionByName(v.filter(col("vec_id") === 302L).withColumn("vec_id", lit(301L)))
+    val e = intercept[IllegalArgumentException](
+      graft.operators.AnnIndex.upsert(doubled, root))
+    assert(e.getMessage.contains("duplicated vec_id"), e.getMessage)
+    assert(graft.operators.AnnIndex.currentVersion(spark, root) == v0)
+    assert(manifest() == before && !manifest().exists(_.startsWith("data-1")), manifest())
+  }
+
   test("filtered LSM probe: where == filter-then-topk of the unfiltered ranking; batch slice matches") {
     import spark.implicits._
     val v = Tables.embeddings(spark, sf)
